@@ -11,7 +11,7 @@ JSON line::
 
 Headline pieces:
 - ``suite``: the full constraint suite (span integrity via the JVM
-  expression fold, salted uniqueness, broadcast anti-join referential,
+  expression fold, hash-aggregated uniqueness, broadcast anti-join referential,
   per-partition summary) over a synthesized interleaved corpus sized
   to the SF (500k docs at sf0.1) — this is the BASELINE.json metric.
 - ``suite_arrow``: same suite with the mandated Arrow UDF row path

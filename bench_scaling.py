@@ -21,7 +21,7 @@ Protocol per level (own subprocess = fresh JVM, no JIT leakage):
   for the pre-existing Iceberg table),
 - one warm-up suite run (codegen compile, broadcast build),
 - median of RUNS timed runs of: read parquet → full constraint suite
-  (span integrity + salted uniqueness + broadcast anti-join
+  (span integrity + hash-aggregated uniqueness + broadcast anti-join
   referential) → violations count + summary collect.
 
 Usage:

@@ -12,12 +12,15 @@ checkpoint table of per-partition lineage + metrics rows
                finished_at timestamp)
 
 On resume, the pending work list is ``all_buckets EXCEPT
-completed_buckets`` — a broadcast left-anti join against the (tiny)
-set of completed partition ids, i.e. cache-HIT partitions are never
-rescanned (Catalyst prunes them at the filter). Partitions are the
-stable content-addressed buckets from ``constraints.core``, so a resume
-at a different executor count processes exactly the same remaining
-documents.
+completed_buckets``. The completed set (at most ``n_buckets`` ids) is
+resolved once on the driver when ``pending()`` is called: no job at all
+when the table does not exist yet, one small ``collect()`` otherwise.
+The docs are then filtered by a literal ``NOT bucket IN (...)``
+predicate, evaluated in the scan's codegen stage, so the suite's scans
+never read the checkpoint table, and the pending frame is a snapshot
+that later lineage appends cannot change. Partitions are the stable content-addressed buckets from
+``constraints.core``, so a resume at a different executor count
+processes exactly the same remaining documents.
 
 Storage is a parquet directory with an Iceberg-like append-only table
 surface (``CheckpointTable``). On a cluster with an Iceberg catalog the
@@ -30,6 +33,7 @@ from __future__ import annotations
 
 import uuid
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -194,6 +198,7 @@ class ResumableRun:
         self.table = CheckpointTable(spark, checkpoint_path)
         self.run_id = run_id or uuid.uuid4().hex
         self.suite = suite or ConstraintSuite()
+        self.partitions_skipped = 0  # size of the frontier pending() resolved
         # per-partition HLL distinct sketches (north_star:
         # "approx_count_distinct via HyperLogLog") ride a sidecar table
         # next to the lineage rows; empty tuple = feature off
@@ -204,16 +209,28 @@ class ResumableRun:
         )
 
     def pending(self, docs: DataFrame, with_referential: bool = False) -> DataFrame:
-        """Documents in not-yet-completed partitions (anti-join on the
-        broadcast completed-bucket set)."""
-        done = self.table.completed_partitions(
-            self.run_id,
-            constraint_ids=self.suite.active_constraints(with_referential),
-        )
-        docs_p = self.suite.with_partition_id(docs)
-        return docs_p.join(F.broadcast(done), "partition_id", "left_anti").drop(
-            "partition_id"
-        )
+        """Documents in not-yet-completed partitions, as of this call.
+
+        The completed bucket ids are collected now (no job when the
+        table does not exist) and filtered as a literal, so the returned
+        frame never rescans the checkpoint table and keeps its rows when
+        lineage for its buckets is appended later. ``completed_partitions``
+        decides which buckets count; how many did is left in
+        ``partitions_skipped``."""
+        done = []
+        if self.table.exists():
+            done = sorted(
+                r.partition_id
+                for r in self.table.completed_partitions(
+                    self.run_id,
+                    constraint_ids=self.suite.active_constraints(with_referential),
+                ).collect()
+            )
+        self.partitions_skipped = len(done)
+        if not done:
+            return docs
+        bucket = stable_partition_id(F.col("doc_id"), self.suite.n_buckets)
+        return docs.where(~bucket.isin(done))
 
     def run(
         self,
@@ -225,9 +242,14 @@ class ResumableRun:
         summary of the work done in THIS invocation (empty if resumed
         past the end)."""
         todo = self.pending(docs, with_referential=asset_catalog is not None)
-        if self.sketch_columns:
-            # todo feeds both the suite and the sketch pass — persist
-            # so --sketch-distinct does not rescan the pending input
+        # todo feeds both the suite and the sketch pass — persist so
+        # --sketch-distinct does not rescan the pending input, unless it
+        # is cached already: pending() returns the caller's docs as-is
+        # when no bucket is done, and their cache is theirs to release
+        cache_todo = (
+            bool(self.sketch_columns) and todo.storageLevel == StorageLevel.NONE
+        )
+        if cache_todo:
             todo = todo.persist()
         result = self.suite.run(todo, asset_catalog)
         if violations_path is not None:
@@ -242,14 +264,15 @@ class ResumableRun:
                 .partitionBy("partition_id")
                 .parquet(violations_path)
             )
-        # Sever lineage BEFORE appending: the summary plan reads the
-        # checkpoint table (via pending→completed anti-join), so writing
-        # new rows to that table must not be visible to any later
-        # re-evaluation of this summary.
+        # Materialize the summary once: it feeds both the lineage append
+        # and the caller, and its plan reads the suite's persisted
+        # frames, which result.unpersist() below releases before the
+        # caller collects it.
         summary = result.summary.localCheckpoint(eager=True)
-        # sketches BEFORE lineage: the todo plan also reads the
-        # checkpoint table, so its re-evaluation must happen while this
-        # invocation's partitions still count as pending
+        # sketches BEFORE lineage: a crash between the two appends then
+        # leaves these partitions pending, and their re-run sketches
+        # union idempotently; the reverse order would mark them done
+        # with no sketch
         if self.sketch_columns:
             self.sketches.append(self._sketch_rows(todo))
         self.table.append(checkpoint_rows_from_summary(summary, self.run_id))
@@ -257,7 +280,7 @@ class ResumableRun:
         # that the summary is materialized — repeated/resumed runs in a
         # long-lived session must not accumulate cached frames
         result.unpersist()
-        if self.sketch_columns:
+        if cache_todo:
             todo.unpersist()
         return summary
 

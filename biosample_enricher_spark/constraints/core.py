@@ -5,7 +5,7 @@ Compiles the declarative suite into one DataFrame pipeline:
     scan documents
       → stable partition_id (content-addressed bucket)
       → row-scope violations  (Column-expr fold OR Arrow UDF, §exprs/§udf)
-      → uniqueness violations (salted two-stage aggregation)
+      → uniqueness violations (one hash aggregation, map-side partial counts)
       → referential violations (broadcast left-anti join vs asset catalog)
       → union → violations(partition_id, doc_id, constraint_id, field, message)
       → per-(constraint, partition) summary with pass/fail counts
@@ -354,7 +354,7 @@ class ConstraintSuite:
         if self.check_uniqueness:
             # duplicate keys are tiny (violations only); persisting them
             # lets both the violation rows and the summary's
-            # distinct-doc totals reuse one salted aggregation
+            # distinct-doc totals reuse one aggregation
             dups = self.duplicate_keys(docs_p)
             if materialize:
                 dups = dups.persist()

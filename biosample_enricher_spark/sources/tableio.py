@@ -25,6 +25,7 @@ import os
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -68,7 +69,18 @@ class ParquetTableIO(TableIO):
         if not self.exists():
             if self.schema is None:
                 raise FileNotFoundError(self.path)
-            return self.spark.createDataFrame([], self.schema)
+            # an empty relation that stays in the JVM: PruneFilters folds
+            # it to an empty LocalRelation, so joins and scans against a
+            # missing table vanish at planning (a local empty DataFrame
+            # is a Python-backed LogicalRDD that only a job proves empty)
+            return (
+                self.spark.range(1)
+                .select([
+                    F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in self.schema.fields
+                ])
+                .where(F.lit(False))
+            )
         reader = self.spark.read
         if self.schema is not None:
             reader = reader.schema(self.schema)

@@ -17,7 +17,9 @@ Deployment (north_rule posture)::
 
 On a cluster, --master/--num-executors come from spark-submit; in the
 sandbox the same script runs under local[N]. Re-running with the same
---run-id resumes: completed partitions are anti-joined away.
+--run-id resumes: the completed buckets are collected once on the
+driver and filtered out of the docs scan, and the report's
+``partitions_skipped`` says how many there were.
 
 With --baseline, drift constraints (two-sample KS over span-length and
 kind-frequency histograms) run against the baseline corpus and are
@@ -169,6 +171,7 @@ def main(argv: list[str]) -> None:
     report = {
         "run_id": args.run_id,
         "partitions_processed": len({r.partition_id for r in rows}),
+        "partitions_skipped": run.partitions_skipped,
         "docs_processed": n_total,
         "elapsed_sec": round(elapsed, 3),
         "docs_per_sec": round(n_total / elapsed, 1) if elapsed > 0 else None,

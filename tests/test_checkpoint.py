@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from biosample_enricher_spark.checkpoint import (
+    CHECKPOINT_SCHEMA,
     CheckpointTable,
     ResumableRun,
     checkpoint_rows_from_summary,
@@ -201,3 +202,85 @@ def test_violations_write_is_idempotent_under_crash_retry(spark, corpus, tmp_pat
         )
     )
     assert resumed == one_shot  # no duplicates from the retried write
+
+
+def _lineage(spark, run_id, rows):
+    """Checkpoint rows for ``(partition_id, constraint_id, status)``."""
+    return spark.createDataFrame(
+        [(run_id, pid, cid, status, 1, 0, {}, None) for pid, cid, status in rows],
+        CHECKPOINT_SCHEMA,
+    )
+
+
+def _pending_buckets(run, docs, n_buckets=16):
+    pending = run.pending(docs).select(
+        stable_partition_id(F.col("doc_id"), n_buckets).alias("b")
+    )
+    return {r.b for r in pending.distinct().collect()}
+
+
+def test_pending_frame_is_a_snapshot(spark, corpus, tmp_path):
+    """The frontier is resolved when pending() is called: appending
+    lineage for the frame's buckets afterwards does not shrink it,
+    whether or not the frame is persisted (an append refreshes cached
+    plans that read the checkpoint path)."""
+    docs, catalog = corpus
+    suite = ConstraintSuite(n_buckets=16)
+    run = ResumableRun(spark, str(tmp_path / "cp"), run_id="snap", suite=suite)
+    run.run(docs.where(stable_partition_id(F.col("doc_id"), 16) < 8), catalog)
+
+    todo = run.pending(docs, with_referential=True)
+    cached = run.pending(docs, with_referential=True).persist()
+    n = todo.count()
+    assert cached.count() == n > 0
+    run.run(docs, catalog)  # appends lineage for every pending bucket
+    assert run.pending(docs, with_referential=True).count() == 0
+    assert todo.count() == n
+    assert cached.count() == n
+    cached.unpersist()
+
+
+def test_failed_lineage_row_keeps_bucket_pending(spark, corpus, tmp_path):
+    """A bucket with a ``failed`` row is not complete, even when every
+    constraint also has an ok row for it."""
+    docs, _ = corpus
+    run = ResumableRun(spark, str(tmp_path / "cp"), run_id="fail",
+                       suite=ConstraintSuite(n_buckets=16))
+    active = run.suite.active_constraints(False)
+    run.table.append(_lineage(
+        spark, "fail", [(b, c, "ok") for b in range(16) for c in active]
+    ))
+    assert _pending_buckets(run, docs) == set()
+    run.table.append(_lineage(spark, "fail", [(3, active[0], "failed")]))
+    assert _pending_buckets(run, docs) == {3}
+    assert run.partitions_skipped == 15
+
+
+def test_missing_constraint_row_keeps_bucket_pending(spark, corpus, tmp_path):
+    """A bucket lacking one active constraint's row (a partial lineage
+    write) stays pending."""
+    docs, _ = corpus
+    run = ResumableRun(spark, str(tmp_path / "cp"), run_id="part",
+                       suite=ConstraintSuite(n_buckets=16))
+    active = run.suite.active_constraints(False)
+    run.table.append(_lineage(spark, "part", [
+        (b, c, "ok") for b in range(16) for c in active
+        if (b, c) != (7, active[-1])
+    ]))
+    assert _pending_buckets(run, docs) == {7}
+    assert run.partitions_skipped == 15
+
+
+def test_sketch_run_leaves_caller_cache_alone(spark, corpus, tmp_path):
+    """On a fresh checkpoint pending() hands back the caller's docs
+    frame; the sketch pass's persist/unpersist must not drop a cache
+    the caller owns."""
+    docs, catalog = corpus
+    docs = docs.persist()
+    docs.count()
+    run = ResumableRun(spark, str(tmp_path / "cp"), run_id="cc",
+                       suite=ConstraintSuite(n_buckets=16),
+                       sketch_columns=("doc_id",))
+    run.run(docs, catalog)
+    assert docs.storageLevel.useMemory or docs.storageLevel.useDisk
+    docs.unpersist()

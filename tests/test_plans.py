@@ -54,6 +54,37 @@ def test_referential_is_broadcast_left_anti(spark):
     assert "BroadcastHashJoin" in p and "LeftAnti" in p
 
 
+@pytest.mark.parametrize("seeded", [False, True], ids=["fresh", "existing"])
+def test_pending_plan_never_scans_the_checkpoint(spark, tmp_path, seeded):
+    """The resume frontier is a driver-side literal: the pending plan is
+    one docs scan with no join or broadcast, and neither it nor the
+    suite built on it reads the checkpoint table."""
+    from biosample_enricher_spark.checkpoint import ResumableRun
+    from biosample_enricher_spark.constraints import stable_partition_id
+
+    docs_path, cp = str(tmp_path / "docs"), str(tmp_path / "checkpoint_table")
+    gen_documents(spark, 300, GenParams(seed=4)).write.parquet(docs_path)
+    docs = spark.read.parquet(docs_path)
+    cat = gen_asset_catalog(spark, GenParams(seed=4))
+    suite = ConstraintSuite(n_buckets=16)
+    run = ResumableRun(spark, cp, run_id="plan", suite=suite)
+    if seeded:
+        done = docs.where(stable_partition_id(F.col("doc_id"), 16) < 5)
+        run.run(done, cat)
+
+    pending = run.pending(docs, with_referential=True)
+    assert run.partitions_skipped == (5 if seeded else 0)
+    p = plan(pending)
+    assert p.count("FileScan parquet") == 1 and docs_path in p
+    assert "Join" not in p and "BroadcastExchange" not in p
+    assert cp not in p
+
+    result = suite.run(pending, cat)
+    assert cp not in plan(result.violations)
+    assert cp not in plan(result.summary)
+    result.unpersist()
+
+
 def test_global_topn_avoids_full_sort(spark):
     p = plan(QUERIES["o1_global_topn"](spark, SF))
     assert "TakeOrderedAndProject" in p

@@ -30,6 +30,18 @@ def test_parquet_roundtrip_append_overwrite(spark, tmp_path):
     assert io.read().count() == 2
 
 
+def test_missing_table_read_folds_to_empty_local_relation(spark, tmp_path):
+    """A missing table reads as a JVM-side empty relation that Catalyst
+    folds at planning, not a Python-backed LogicalRDD that only a job
+    can prove empty."""
+    df = resolve_table_io(spark, str(tmp_path / "missing"), schema=SCHEMA).read()
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in optimized
+    assert "LogicalRDD" not in optimized
+    assert df.schema.names == SCHEMA.names
+    assert [f.dataType for f in df.schema] == [f.dataType for f in SCHEMA]
+
+
 def test_missing_parquet_without_schema_raises(spark, tmp_path):
     io = resolve_table_io(spark, str(tmp_path / "nope"))
     with pytest.raises(FileNotFoundError):
