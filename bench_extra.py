@@ -8,8 +8,6 @@ Modes:
   (default sf0.1) — ``min`` of ``--repeats`` timed ``.count()`` runs per
   query, slowest first. The optimization round's per-operator checklist
   evidence (OPTIMIZATION_r06.md).
-- ``--suite``: the bench.py suite tiers re-run standalone (cold + warm
-  expr / Arrow) for before/after comparison without touching bench.py.
 - ``--noop NAME``: isolate one query with the noop sink (guide §1.4)
   instead of ``.count()``.
 
@@ -84,46 +82,6 @@ def run_registry(repeats: int, only: list[str] | None = None) -> None:
     spark.stop()
 
 
-def run_suite() -> None:
-    from biosample_enricher_spark.constraints import ConstraintSuite
-    from biosample_enricher_spark.synth import (
-        GenParams,
-        gen_asset_catalog,
-        gen_documents,
-    )
-
-    spark = _spark()
-    tag = os.path.basename(SF_DIR.rstrip("/"))
-    n_docs = {"sf0.001": 5_000, "sf0.01": 50_000, "sf0.1": 500_000}.get(
-        tag, 50_000
-    )
-    params = GenParams(seed=42, n_assets=100_000)
-    catalog = gen_asset_catalog(spark, params)
-    docs = gen_documents(spark, n_docs, params)
-    docs.persist()
-    docs.count()
-
-    def one(use_arrow: bool) -> float:
-        suite = ConstraintSuite(use_arrow_udf=use_arrow)
-        t0 = time.perf_counter()
-        res = suite.run(docs, catalog)
-        res.violations.count()
-        res.summary.collect()
-        dt = time.perf_counter() - t0
-        res.unpersist()
-        return dt
-
-    out = {"metric": "suite_tiers_sec", "sf": tag, "n_docs": n_docs}
-    out["suite"] = round(one(False), 3)
-    out["suite_warm"] = round(min(one(False) for _ in range(3)), 3)
-    out["suite_arrow"] = round(one(True), 3)
-    out["suite_arrow_warm"] = round(min(one(True) for _ in range(3)), 3)
-    out["host_load_1m"] = round(os.getloadavg()[0], 2)
-    docs.unpersist()
-    print(json.dumps(out))
-    spark.stop()
-
-
 def run_noop(name: str, repeats: int) -> None:
     from biosample_enricher_spark.queries import QUERIES
 
@@ -142,16 +100,13 @@ def run_noop(name: str, repeats: int) -> None:
 if __name__ == "__main__":
     ap = argparse.ArgumentParser()
     ap.add_argument("--registry", action="store_true")
-    ap.add_argument("--suite", action="store_true")
     ap.add_argument("--noop")
     ap.add_argument("--only", nargs="*")
     ap.add_argument("--repeats", type=int, default=2)
     args = ap.parse_args()
     if args.registry:
         run_registry(args.repeats, args.only)
-    elif args.suite:
-        run_suite()
     elif args.noop:
         run_noop(args.noop, args.repeats)
     else:
-        ap.error("pick a mode: --registry / --suite / --noop NAME")
+        ap.error("pick a mode: --registry / --noop NAME")

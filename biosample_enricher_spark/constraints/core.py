@@ -4,7 +4,7 @@ Compiles the declarative suite into one DataFrame pipeline:
 
     scan documents
       → stable partition_id (content-addressed bucket)
-      → row-scope violations  (Column-expr fold OR Arrow UDF, §exprs/§udf)
+      → row-scope violations  (one vectorized Arrow UDF, §udf)
       → uniqueness violations (one hash aggregation, map-side partial counts)
       → referential violations (broadcast left-anti join vs asset catalog)
       → union → violations(partition_id, doc_id, constraint_id, field, message)
@@ -41,8 +41,7 @@ from ..spec import (
     N_BUCKETS_DEFAULT,
     ROW_CONSTRAINTS,
 )
-from . import exprs
-from . import udf as arrow_udf
+from .udf import span_violations
 
 def stable_partition_id(doc_id: Column, n_buckets: int = N_BUCKETS_DEFAULT) -> Column:
     """Content-addressed partition id: deterministic under any physical
@@ -62,12 +61,19 @@ class SuiteResult:
 
 
 class ConstraintSuite:
-    """The engine's built-in suite over the interleaved-documents table."""
+    """The engine's built-in suite over the interleaved-documents table.
+
+    Row-scope constraints always run through the Arrow UDF
+    (``constraints/udf.py``). ``use_arrow_udf`` is kept only so callers
+    that pass ``use_arrow_udf=True`` keep working; ``False`` used to
+    select the Column-expression fold, which was removed, and now raises
+    ``ValueError`` instead of silently running the Arrow path.
+    """
 
     def __init__(
         self,
         n_buckets: int = N_BUCKETS_DEFAULT,
-        use_arrow_udf: bool = False,
+        use_arrow_udf: bool = True,
         check_uniqueness: bool = True,
         referential_mode: str = "broadcast",
         bloom_m_bits: int = 1 << 24,
@@ -81,8 +87,12 @@ class ConstraintSuite:
                 f"referential_mode must be 'broadcast' or 'bloom', "
                 f"got {referential_mode!r}"
             )
+        if not use_arrow_udf:
+            raise ValueError(
+                "use_arrow_udf=False selected the Column-expression fold, "
+                "which was removed; the Arrow UDF is the only row path"
+            )
         self.n_buckets = n_buckets
-        self.use_arrow_udf = use_arrow_udf
         self.check_uniqueness = check_uniqueness
         self.referential_mode = referential_mode
         self.bloom_m_bits = bloom_m_bits
@@ -96,17 +106,13 @@ class ConstraintSuite:
         )
 
     def row_violations(self, docs_p: DataFrame) -> DataFrame:
-        """Per-row span-sequence violations, exploded to violation rows."""
-        if self.use_arrow_udf:
-            viol = arrow_udf.span_violations(F.col("spans"))
-        else:
-            # the memoized canonical fold — rebuilding the ~0.3 s
-            # py4j expression tree per suite run was measured r6
-            viol = exprs.span_violations_canonical()
+        """Per-row span-sequence violations, exploded to violation rows.
+        Needs only ``partition_id``, ``doc_id`` and ``spans``, so it runs
+        unchanged over a streaming frame."""
         items = docs_p.select(
             "partition_id",
             "doc_id",
-            F.explode(viol).alias("v"),
+            F.explode(span_violations(F.col("spans"))).alias("v"),
         )
         return items.select(
             "partition_id",

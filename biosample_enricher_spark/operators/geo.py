@@ -28,7 +28,7 @@ from ..spec import STRIP_WHITESPACE
 def _strip(c: Column) -> Column:
     """Whitespace strip matching the reference's ``str.strip()`` — the
     full ``spec.STRIP_WHITESPACE`` class, not ``F.trim``'s 0x20-only
-    (same parity contract as constraints/exprs.py:51)."""
+    (same strip class as the span checks in constraints/udf.py)."""
     return F.btrim(c, F.lit(STRIP_WHITESPACE))
 
 # The reference's 50-state set (evaluator.py:369-420).

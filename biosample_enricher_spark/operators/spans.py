@@ -1,7 +1,7 @@
 """Span transforms for the interleaved text+media document shape
 (``spans: array<struct<kind,text,media_ref,offset>>``) — the repair /
 re-chunk side of the payload whose *validation* side lives in
-``constraints/`` (offset-ordering checks, exprs.py:63-131).
+``constraints/`` (the offset_ordering check in constraints/udf.py).
 
 ``normalize_offsets`` REPAIRS what ``offset_ordering`` detects: it
 recomputes every span's offset as the running position in the
@@ -80,7 +80,7 @@ def overlap_count(spans: Column) -> Column:
     shape (spans that claim the same stream positions corrupt
     training-chunk assembly the way mis-ordered offsets do; this is
     the pairwise complement of the monotonicity check in
-    constraints/exprs.py offset_ordering).
+    constraints/udf.py offset_ordering).
 
     Each span occupies the half-open interval ``[offset, offset +
     stream_length)`` (text → char length, media → 1 placeholder — the

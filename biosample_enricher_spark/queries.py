@@ -2107,7 +2107,7 @@ def streaming_validation(spark, sf_dir):
     """§2.11 streaming tier on driver data: the flat documents table is
     streamed through the incremental file source, lifted to the
     interleaved span shape in-stream, validated with the SAME batch
-    constraint expressions, drained with availableNow into a memory
+    row-violation projection, drained with availableNow into a memory
     sink, and returned. Every fifth doc is lifted as a media span with
     a null ref so the stream provably emits violations. Batch parity +
     exactly-once resume are pinned in tests/test_streaming.py."""
@@ -4904,7 +4904,7 @@ def v6_bloom_referential(spark, sf_dir):
 def sp1_span_offsets(spark, sf_dir):
     """SP1: span-offset normalization on the interleaved document
     shape — the REPAIR twin of the constraint suite's offset_ordering
-    check (constraints/exprs.py): every span's offset is recomputed
+    check (constraints/udf.py): every span's offset is recomputed
     as its running position in the doc's token stream (text spans
     advance by char length, media spans by one placeholder position)
     via pure higher-order Column expressions (operators/spans.py

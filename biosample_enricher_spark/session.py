@@ -2,8 +2,9 @@
 
 Defaults follow the scale posture in SURVEY.md §4: AQE on (runtime
 re-plan + skew-join splitting), Arrow on (vectorized JVM<->Python
-batches for the two pandas UDFs), nested-schema pruning on (constraint
-expressions touch few struct fields of ``spans``), shuffle partitions
+batches for the span-integrity Arrow UDF and the pandas UDFs),
+nested-schema pruning on (the row check reads four struct fields of
+``spans``), shuffle partitions
 sized to cores rather than the 200 default.
 
 On a real cluster the same builder is used by ``spark-submit

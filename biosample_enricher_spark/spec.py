@@ -1,14 +1,12 @@
 """Canonical constraint-suite specification.
 
 Single source of truth for vocabularies, null-sentinel rules, constraint
-ids, and violation-message formats. Three independent implementations
+ids, and violation-message formats. Two independent implementations
 consume it and must agree exactly (tested in tests/test_parity.py):
 
-1. the vectorized Arrow UDF (``constraints/udf.py``) — the mandated
-   per-row path,
-2. the pure Column-expression variant (``constraints/exprs.py``) — the
-   JVM fast path used by the benchmark,
-3. the plain-Python reference oracle (``constraints/reference.py``) —
+1. the vectorized Arrow UDF (``constraints/udf.py``) — the engine's
+   one per-row path,
+2. the plain-Python reference oracle (``constraints/reference.py``) —
    the parity model of the reference's per-record verdict logic
    (``/root/reference/biosample_enricher/synthetic_validation_demo.py:69-94``
    and the pydantic field rules in ``models.py:15-134``).
@@ -34,11 +32,11 @@ MEDIA_KINDS = ("image", "audio", "table")
 # whitespace stripping at models.py:133.
 NULL_SENTINELS = frozenset({"null", "n/a", "unknown", "none", ""})
 
-# The single whitespace class stripped by ALL three implementations
-# (JVM expression, Arrow UDF, Python oracle). Chosen = Java regex ``\s``
-# ([ \t\n\x0B\f\r]) so the exprs path can use a plain regexp_replace;
-# the Python paths pass this explicit set to str.strip so no path ever
-# strips a character another path keeps (three-way parity contract).
+# The single whitespace class stripped by both implementations (the
+# Arrow UDF passes it to utf8_trim, the Python oracle to str.strip) and
+# by the Column-expression operators (btrim). It equals Java regex
+# ``\s`` ([ \t\n\x0B\f\r]); no path may strip a character another
+# path keeps, e.g. NBSP or U+3000 (parity contract).
 STRIP_WHITESPACE = " \t\n\x0b\f\r"
 
 # --- constraint ids ---------------------------------------------------------
@@ -124,7 +122,7 @@ N_BUCKETS_DEFAULT = 64
 def normalize_text(value: str | None) -> str | None:
     """Python-side null-sentinel normalization (the oracle's version).
 
-    Mirrors the Spark expression in ``constraints/exprs.py::norm_col``.
+    Mirrors ``_absent`` in ``constraints/udf.py``.
     """
     if value is None:
         return None

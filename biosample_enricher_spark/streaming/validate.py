@@ -1,8 +1,8 @@
 """Structured Streaming ingest validation (§2.11 streaming tier).
 
-The batch engine's row-scope constraint expressions are stateless
-Column projections, so the SAME plan fragment (``exprs.span_violations``
-+ content-addressed partition ids) runs unchanged under
+The batch engine's row-scope check is a stateless projection (the
+``constraints/udf.py`` Arrow UDF + content-addressed partition ids), so
+the SAME ``ConstraintSuite.row_violations`` runs unchanged under
 ``readStream`` — violations stream out with exactly-once semantics via
 the sink checkpoint. This mirrors how the reference's per-record
 validation would sit behind a queue consumer, re-expressed as Spark's
@@ -23,8 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..constraints import exprs
-from ..constraints.core import stable_partition_id
+from ..constraints.core import ConstraintSuite, stable_partition_id
 from ..spec import (
     C_DOC_ID_UNIQUE,
     DOCUMENTS_SCHEMA,
@@ -51,28 +50,13 @@ def stream_documents(
 def streaming_violations(
     docs: DataFrame, n_buckets: int = N_BUCKETS_DEFAULT
 ) -> DataFrame:
-    """Row-scope violations over a streaming documents frame — the
-    exact batch expressions (no Python, no state), so every micro-batch
-    is one codegen'd projection. Referential needs the asset catalog
-    and stays in the batch/resume tier; in-stream uniqueness is the
-    stateful ``streaming_duplicate_violations`` below."""
-    return (
-        docs.withColumn(
-            "partition_id", stable_partition_id(F.col("doc_id"), n_buckets)
-        )
-        .select(
-            "partition_id",
-            "doc_id",
-            F.explode(exprs.span_violations_canonical()).alias("v"),
-        )
-        .select(
-            "partition_id",
-            "doc_id",
-            F.col("v.constraint_id").alias("constraint_id"),
-            F.col("v.field").alias("field"),
-            F.col("v.message").alias("message"),
-        )
-    )
+    """Row-scope violations over a streaming documents frame: the batch
+    suite's own ``row_violations`` (one Arrow UDF projection, no state).
+    Referential needs the asset catalog and stays in the batch/resume
+    tier; in-stream uniqueness is the stateful
+    ``streaming_duplicate_violations`` below."""
+    suite = ConstraintSuite(n_buckets=n_buckets)
+    return suite.row_violations(suite.with_partition_id(docs))
 
 
 def windowed_violation_counts(
@@ -102,7 +86,7 @@ def streaming_duplicate_violations(
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """In-stream doc_id uniqueness: the stateful tier the row-scope
-    expressions can't cover (``streaming_violations`` docstring notes
+    projection can't cover (``streaming_violations`` docstring notes
     the gap). ``applyInPandasWithState`` keyed by doc_id keeps one
     per-key occurrence counter; every occurrence after the first emits
     one violation row *in the micro-batch where it arrives* — a

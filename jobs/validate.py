@@ -13,7 +13,7 @@ Deployment (north_rule posture)::
         --checkpoint <checkpoint table path> \\
         --violations-out <violations output path> \\
         --run-id <stable id for resume> \\
-        [--n-buckets 64] [--arrow-udf] [--baseline <path>]
+        [--n-buckets 64] [--baseline <path>]
 
 On a cluster, --master/--num-executors come from spark-submit; in the
 sandbox the same script runs under local[N]. Re-running with the same
@@ -43,9 +43,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
     p.add_argument("--violations-out")
     p.add_argument("--run-id", required=True)
     p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument("--arrow-udf", action="store_true",
-                   help="use the Arrow UDF row path instead of the "
-                        "Column-expression fold")
     p.add_argument("--baseline",
                    help="baseline documents path for drift constraints")
     p.add_argument("--drift-by-partition", action="store_true",
@@ -144,7 +141,6 @@ def main(argv: list[str]) -> None:
 
     suite = ConstraintSuite(
         n_buckets=args.n_buckets,
-        use_arrow_udf=args.arrow_udf,
         referential_mode="bloom" if args.referential_bloom else "broadcast",
     )
     run = ResumableRun(

@@ -1,5 +1,5 @@
-"""Three-way parity: Column-expression fold == Arrow UDF == plain-Python
-oracle, over the seeded-violation corpus and hand-built edge cases.
+"""Parity: the Arrow UDF row path == the plain-Python oracle, over the
+seeded-violation corpus and hand-built edge cases.
 
 This is the engine's primary correctness gate (SURVEY.md §5.3): the
 Spark paths must reproduce the reference-style per-record verdicts and
@@ -7,6 +7,8 @@ violation rows exactly.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,14 +19,32 @@ from biosample_enricher_spark.spec import DOCUMENTS_SCHEMA
 from biosample_enricher_spark.synth import GenParams, gen_documents
 
 N_DOCS = 400
+ARROW_BATCH_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
 
 
-def _row_viols(spark, docs, use_arrow_udf):
-    suite = ConstraintSuite(use_arrow_udf=use_arrow_udf, check_uniqueness=False)
+@contextmanager
+def _arrow_batch_size(spark, small):
+    """With ``small`` set, cap Arrow batches at 3 records, so each
+    partition reaches the kernel as many batches and the list arrays it
+    sees start at non-zero offsets."""
+    if not small:
+        yield
+        return
+    old = spark.conf.get(ARROW_BATCH_CONF)
+    spark.conf.set(ARROW_BATCH_CONF, "3")
+    try:
+        yield
+    finally:
+        spark.conf.set(ARROW_BATCH_CONF, old)
+
+
+def _row_viols(spark, docs, small_arrow_batches=False):
+    suite = ConstraintSuite(check_uniqueness=False)
     df = suite.row_violations(suite.with_partition_id(docs))
+    with _arrow_batch_size(spark, small_arrow_batches):
+        rows = df.collect()
     return sorted(
-        (r.doc_id, r.constraint_id, r.field, r.message)
-        for r in df.collect()
+        (r.doc_id, r.constraint_id, r.field, r.message) for r in rows
     )
 
 
@@ -106,10 +126,10 @@ def _oracle_for_df(df):
     return sorted(validate_rows(rows))
 
 
-@pytest.mark.parametrize("use_arrow_udf", [False, True])
-def test_edge_corpus_matches_oracle(spark, use_arrow_udf):
+@pytest.mark.parametrize("small_arrow_batches", [False, True])
+def test_edge_corpus_matches_oracle(spark, small_arrow_batches):
     docs = _edge_df(spark)
-    got = [(d, c, f, m) for d, c, f, m in _row_viols(spark, docs, use_arrow_udf)]
+    got = _row_viols(spark, docs, small_arrow_batches)
     expected = _oracle_for_df(docs)
     assert got == expected
     # sanity: the corpus actually exercises every row constraint
@@ -123,18 +143,23 @@ def test_edge_corpus_matches_oracle(spark, use_arrow_udf):
     }
 
 
-@pytest.mark.parametrize("use_arrow_udf", [False, True])
-def test_synth_corpus_matches_oracle(spark, use_arrow_udf):
+@pytest.mark.parametrize("small_arrow_batches", [False, True])
+def test_synth_corpus_matches_oracle(spark, small_arrow_batches):
     docs = gen_documents(spark, N_DOCS, GenParams(seed=7))
-    got = _row_viols(spark, docs, use_arrow_udf)
+    got = _row_viols(spark, docs, small_arrow_batches)
     expected = _oracle_for_df(docs)
     assert got == expected
     assert len(expected) > 0  # seeded violations present
 
 
-def test_expr_and_udf_agree_on_larger_corpus(spark):
+def test_larger_corpus_matches_oracle(spark):
     docs = gen_documents(spark, 2000, GenParams(seed=11))
-    assert _row_viols(spark, docs, False) == _row_viols(spark, docs, True)
+    assert _row_viols(spark, docs) == _oracle_for_df(docs)
+
+
+def test_removed_fold_cannot_be_selected():
+    with pytest.raises(ValueError, match="fold"):
+        ConstraintSuite(use_arrow_udf=False)
 
 
 def test_generator_is_deterministic(spark):
@@ -147,4 +172,4 @@ def test_generator_is_deterministic(spark):
 
 def test_clean_corpus_has_no_row_violations(spark):
     docs = gen_documents(spark, 300, GenParams(seed=3).clean())
-    assert _row_viols(spark, docs, False) == []
+    assert _row_viols(spark, docs) == []

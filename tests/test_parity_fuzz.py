@@ -1,7 +1,9 @@
-"""Property-based three-way parity: hypothesis-generated span
+"""Property-based parity through Spark: hypothesis-generated span
 documents (arbitrary kinds/texts/refs/offsets incl. junk, sentinels,
-nulls, empties) must produce identical violation rows from the
-expression fold, the Arrow UDF, and the Python oracle."""
+nulls, empties) must produce identical violation rows from the suite's
+Arrow UDF row path and the Python oracle. The JVM-free kernel test
+(tests/test_span_kernel.py) runs the same strategies with many more
+examples."""
 
 from __future__ import annotations
 
@@ -20,9 +22,8 @@ TEXTS = st.one_of(
     st.sampled_from(
         [
             "", "   ", "n/a", "N/A", "null", "unknown", "None", "ok text",
-            # whitespace-padded sentinels: all paths must strip the same
-            # class (spec.STRIP_WHITESPACE) — regression for the F.trim
-            # (0x20-only) divergence
+            # whitespace-padded sentinels: both paths must strip the same
+            # class (spec.STRIP_WHITESPACE), not just 0x20
             "n/a\t", "\nnull ", "\x0bunknown\r", " none\x0c",
             # NBSP-padded sentinel: NOT in the strip class, so it
             # must survive normalization as a PRESENT value
@@ -32,7 +33,7 @@ TEXTS = st.one_of(
     st.text(
         # accents + CJK + the full ASCII strip class + UNICODE
         # whitespace (NBSP, ideographic space, line separator) that is
-        # OUTSIDE spec.STRIP_WHITESPACE: all three paths must agree on
+        # OUTSIDE spec.STRIP_WHITESPACE: both paths must agree on
         # NOT stripping it (python str.strip() with no args would)
         alphabet="abc XYZ0é中\t\n\r\x0b\x0c\u00a0\u3000\u2028",
         min_size=0,
@@ -62,21 +63,14 @@ BATCH = st.lists(DOC, min_size=1, max_size=40)
     suppress_health_check=[HealthCheck.too_slow],
 )
 @given(batch=BATCH)
-def test_fuzzed_docs_three_way_parity(spark, batch):
+def test_fuzzed_docs_match_oracle(spark, batch):
     rows = [
         {"doc_id": f"doc-{i:04d}", "spans": spans} for i, spans in enumerate(batch)
     ]
     df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    expected = sorted(validate_rows(rows))
-
-    results = []
-    for use_arrow in (False, True):
-        suite = ConstraintSuite(use_arrow_udf=use_arrow, check_uniqueness=False)
-        got = sorted(
-            (r.doc_id, r.constraint_id, r.field, r.message)
-            for r in suite.row_violations(suite.with_partition_id(df)).collect()
-        )
-        results.append(got)
-
-    assert results[0] == expected, "expression fold diverged from oracle"
-    assert results[1] == expected, "Arrow UDF diverged from oracle"
+    suite = ConstraintSuite(check_uniqueness=False)
+    got = sorted(
+        (r.doc_id, r.constraint_id, r.field, r.message)
+        for r in suite.row_violations(suite.with_partition_id(df)).collect()
+    )
+    assert got == sorted(validate_rows(rows))

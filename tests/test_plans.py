@@ -90,11 +90,38 @@ def test_global_topn_avoids_full_sort(spark):
     assert "TakeOrderedAndProject" in p
 
 
-def test_expr_path_has_no_python(spark):
+def test_default_row_plan_uses_arrow_udf(spark):
+    """The suite's one row path is the Arrow UDF, with no option to
+    select anything else."""
     docs = gen_documents(spark, 200, GenParams(seed=1))
-    suite = ConstraintSuite(use_arrow_udf=False)
+    suite = ConstraintSuite()
     p = plan(suite.row_violations(suite.with_partition_id(docs)))
-    assert "EvalPython" not in p  # neither BatchEvalPython nor ArrowEvalPython
+    assert "ArrowEvalPython" in p
+    assert "BatchEvalPython" not in p
+
+
+def test_streaming_row_plan_uses_arrow_udf(spark, tmp_path, capsys):
+    """The streaming tier runs the batch suite's row projection."""
+    from biosample_enricher_spark.streaming import (
+        stream_documents,
+        streaming_violations,
+    )
+
+    docs_path = str(tmp_path / "docs")
+    gen_documents(spark, 200, GenParams(seed=1)).write.parquet(docs_path)
+    viol = streaming_violations(stream_documents(spark, docs_path))
+    q = (
+        viol.writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    capsys.readouterr()
+    q.explain()
+    p = capsys.readouterr().out
+    assert "ArrowEvalPython" in p
+    assert "BatchEvalPython" not in p
 
 
 def test_udf_path_uses_arrow_not_pickle(spark):

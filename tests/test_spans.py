@@ -9,7 +9,7 @@ import random
 
 from pyspark.sql import functions as F
 
-from biosample_enricher_spark.constraints import exprs
+from biosample_enricher_spark.constraints import udf
 from biosample_enricher_spark.operators.spans import (
     normalize_offsets,
     running_offsets,
@@ -76,13 +76,13 @@ def test_repair_zeroes_offset_violations_for_positive_length_docs(spark):
     )
     before = (
         docs.where(all_positive)
-        .select(F.explode(exprs.span_violations(F.col("spans"))).alias("v"))
+        .select(F.explode(udf.span_violations(F.col("spans"))).alias("v"))
         .where(F.col("v.constraint_id") == "offset_ordering")
         .count()
     )
     after = (
         repaired.select(
-            F.explode(exprs.span_violations(F.col("spans"))).alias("v")
+            F.explode(udf.span_violations(F.col("spans"))).alias("v")
         )
         .where(F.col("v.constraint_id") == "offset_ordering")
         .count()
@@ -101,7 +101,7 @@ def test_repair_leaves_only_zero_length_ties(spark):
     )
     leftover = (
         repaired.select(
-            F.explode(exprs.span_violations(F.col("spans"))).alias("v")
+            F.explode(udf.span_violations(F.col("spans"))).alias("v")
         )
         .where(F.col("v.constraint_id") == "offset_ordering")
         .select("v.message")
