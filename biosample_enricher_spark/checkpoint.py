@@ -126,33 +126,29 @@ class CheckpointTable:
     def completed_partitions(
         self,
         run_id: str,
-        n_constraints: int | None = None,
         constraint_ids: list[str] | None = None,
     ) -> DataFrame:
         """Distinct partition ids fully finished for this run: no
-        ``failed`` row, and (when ``n_constraints`` is given) every
-        active constraint's row present — a partition with a partial
-        or mixed ok/failed write is NOT skipped on resume.
+        ``failed`` row, and (when ``constraint_ids`` is given) a row for
+        every one of those constraints — a partition with a partial or
+        mixed ok/failed write is NOT skipped on resume.
 
-        ``constraint_ids`` restricts the completeness count to the
-        suite's OWN constraints: the table may also carry foreign
-        lineage rows (per-partition drift verdicts from
-        ``--drift-by-partition``), and counting those would let a
-        drift row stand in for a missing suite constraint — e.g. a
-        resume that newly adds the referential check would see
+        ``constraint_ids`` are the suite's OWN constraints: the table
+        may also carry foreign lineage rows (per-partition drift
+        verdicts from ``--drift-by-partition``), and counting those
+        would let a drift row stand in for a missing suite constraint —
+        e.g. a resume that newly adds the referential check would see
         k+2 ≥ k+1 distinct ids and silently skip the partition."""
         cp = self.read().where(F.col("run_id") == run_id)
         ok = cp.where(F.col("status") != "failed").select(
             "partition_id", "constraint_id"
         )
         if constraint_ids is not None:
-            ok = ok.where(F.col("constraint_id").isin(list(constraint_ids)))
-            n_constraints = len(constraint_ids)
-        if n_constraints is not None:
             done = (
-                ok.groupBy("partition_id")
+                ok.where(F.col("constraint_id").isin(list(constraint_ids)))
+                .groupBy("partition_id")
                 .agg(F.countDistinct("constraint_id").alias("_n"))
-                .where(F.col("_n") >= n_constraints)
+                .where(F.col("_n") >= len(constraint_ids))
                 .select("partition_id")
             )
         else:

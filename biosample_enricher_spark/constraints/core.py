@@ -237,26 +237,12 @@ class ConstraintSuite:
             ids.append(C_MEDIA_REF_REFERENTIAL)
         return ids
 
-    def violations(
-        self, docs: DataFrame, asset_catalog: DataFrame | None = None
-    ) -> DataFrame:
-        docs_p = self.with_partition_id(docs)
-        out = self.row_violations(docs_p)
-        if self.check_uniqueness:
-            out = out.unionByName(self.uniqueness_violations(docs_p))
-        if asset_catalog is not None:
-            out = out.unionByName(
-                self.referential_violations(docs_p, asset_catalog)
-            )
-        return out
-
     def summarize(
         self,
-        docs: DataFrame,
+        docs_p: DataFrame,
         violations: DataFrame,
         with_referential: bool,
         dups: DataFrame | None = None,
-        docs_pre_partitioned: bool = False,
     ) -> DataFrame:
         """Per-(constraint, partition) pass/fail summary.
 
@@ -274,16 +260,12 @@ class ConstraintSuite:
         distinct hash aggregation (which would build per-task hash
         tables of every doc_id and spill at scale).
 
-        ``docs_pre_partitioned`` declares that ``docs`` ALREADY carries
-        this suite's content-addressed ``partition_id`` (``run()``
-        passes its own ``docs_p``), skipping one analyzed projection
-        per suite run. It is an explicit flag, not a column sniff: a
-        caller's unrelated ``partition_id`` column (physical ids, a
-        different n_buckets) must NOT be trusted silently — the dups
-        correction and the violations frame key by
-        ``stable_partition_id(n_buckets)`` and would mis-join.
+        ``docs_p`` must already carry this suite's content-addressed
+        ``partition_id`` (``with_partition_id``; ``run()`` passes its
+        own): the dups correction and the violations frame key by
+        ``stable_partition_id(n_buckets)``, so an unrelated
+        ``partition_id`` column would mis-join.
         """
-        docs_p = docs if docs_pre_partitioned else self.with_partition_id(docs)
         if dups is not None:
             row_counts = docs_p.groupBy("partition_id").agg(
                 F.count(F.lit(1)).alias("_n_rows")
@@ -346,13 +328,11 @@ class ConstraintSuite:
         self,
         docs: DataFrame,
         asset_catalog: DataFrame | None = None,
-        materialize: bool = True,
     ) -> SuiteResult:
-        """Full suite. With ``materialize`` (default) the violations
-        frame is persisted so the summary reuses it instead of
-        recomputing the row-constraint scan — violations are tiny
-        relative to the corpus (call ``SuiteResult.unpersist()`` when
-        done)."""
+        """Full suite. The violations frame is persisted so the summary
+        reuses it instead of recomputing the row-constraint scan —
+        violations are tiny relative to the corpus (call
+        ``SuiteResult.unpersist()`` when done)."""
         docs_p = self.with_partition_id(docs)
         dups = None
         persisted: list[DataFrame] = []
@@ -361,23 +341,14 @@ class ConstraintSuite:
             # duplicate keys are tiny (violations only); persisting them
             # lets both the violation rows and the summary's
             # distinct-doc totals reuse one aggregation
-            dups = self.duplicate_keys(docs_p)
-            if materialize:
-                dups = dups.persist()
-                persisted.append(dups)
+            dups = self.duplicate_keys(docs_p).persist()
+            persisted.append(dups)
             out = out.unionByName(self.uniqueness_violations_from(dups))
         if asset_catalog is not None:
             out = out.unionByName(self.referential_violations(docs_p, asset_catalog))
-        if materialize:
-            out = out.persist()
-            persisted.append(out)
-        summary = self.summarize(
-            docs_p,
-            out,
-            asset_catalog is not None,
-            dups=dups,
-            docs_pre_partitioned=True,
-        )
+        out = out.persist()
+        persisted.append(out)
+        summary = self.summarize(docs_p, out, asset_catalog is not None, dups=dups)
         return SuiteResult(
             violations=out, summary=summary, persisted=tuple(persisted)
         )

@@ -1,5 +1,6 @@
 """Distribution-drift constraints: two-sample Kolmogorov–Smirnov over
-span-length and kind-frequency histograms (SURVEY.md §2.9).
+span-length and kind-frequency histograms (SURVEY.md §2.9), plus the
+TV, PSI and EMD statistics over the same histogram inputs.
 
 Reference analog: before/after coverage deltas and improvement
 categorization (``/root/reference/biosample_enricher/weather/metrics.py:
@@ -9,11 +10,14 @@ test instead of hand-binned categories.
 
 Scale shape: the raw corpora are first reduced to tiny histogram tables
 by distributed ``groupBy(bucket).count()`` (map-side partial agg bounds
-the shuffle to |buckets| × partitions rows — skew-immune), then the KS
-statistic is computed per metric group inside a grouped-map Arrow UDF
-(``applyInPandas``) over the aggregated rows. Python only ever sees
-histograms, never documents. The weighted two-sample KS on binned data
-is exact for the binned distributions: D = max_bucket |CDF_a - CDF_b|.
+the shuffle to |buckets| × partitions rows — skew-immune). Every
+statistic then starts from one alignment step (``_aligned``: a
+full-outer join of the two histograms with zero-filled counts) and is
+computed by window expressions and one aggregate over the aligned
+rows — no Python anywhere. The weighted two-sample KS on binned data
+is exact for the binned distributions: D = max_bucket |CDF_a - CDF_b|,
+with the CDF taken in the bucket column's own order (numeric buckets
+numerically, string buckets lexicographically).
 
 The pass threshold uses the standard large-sample critical value
 D_crit = c(alpha) * sqrt((n_a + n_b) / (n_a * n_b)), c(0.05) ≈ 1.358.
@@ -21,61 +25,86 @@ D_crit = c(alpha) * sqrt((n_a + n_b) / (n_a * n_b)), c(0.05) ≈ 1.358.
 
 from __future__ import annotations
 
-import math
+from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..spec import C_DRIFT_KIND_FREQ, C_DRIFT_SPAN_LEN
 from .stats import kind_histogram, span_length_histogram
 
-KS_RESULT_SCHEMA = (
-    "constraint_id string, ks_stat double, n_base long, n_cur long, "
-    "d_crit double, passed boolean"
-)
-
 _KS_C_ALPHA_05 = 1.3581015157406195  # sqrt(-0.5 * ln(0.05/2))
 
 
-def _ks_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Weighted two-sample KS from one metric's histogram rows.
+def _aligned(
+    base_hist: DataFrame,
+    cur_hist: DataFrame,
+    bucket_col: str,
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """Full-outer join of two ``(keys..., bucket_col, n)`` histograms on
+    ``keys + bucket`` → ``(keys..., bucket, n_base, n_cur)`` with the
+    count of a bucket missing on one side filled with 0."""
+    a = base_hist.select(
+        *keys, F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base")
+    )
+    b = cur_hist.select(
+        *keys, F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur")
+    )
+    return a.join(b, [*keys, "bucket"], "full_outer").select(
+        *keys,
+        "bucket",
+        F.coalesce("n_base", F.lit(0)).alias("n_base"),
+        F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
+    )
 
-    Input rows: (constraint_id, bucket, n_base, n_cur) — full outer
-    union of the two histograms with zero-filled counts.
+
+def _ks(aligned: DataFrame, constraint_id: str, keys: Sequence[str] = ()) -> DataFrame:
+    """Weighted two-sample KS per ``keys`` group of aligned histogram
+    rows → ``(constraint_id, keys..., ks_stat, n_base, n_cur, d_crit,
+    passed)``.
+
+    One window pass per group, ordered by the bucket in its own type:
+    integer cumulative counts ``ca``/``cb`` and totals ``na``/``nb``,
+    then ``ks_stat = max |ca/na − cb/nb|`` — exact integer cumsums
+    divided by exact integer totals in IEEE doubles, so any SQL engine
+    replays it bit for bit. Degenerate groups: one empty side is
+    maximal drift (ks 1.0, d_crit NULL, fails); both sides empty
+    yields no row, because grouping by the ``constraint_id`` literal
+    over no rows yields no group.
     """
-    cid = pdf["constraint_id"].iloc[0]
-    # CDF order: numeric when every bucket parses as a number (span
-    # lengths), else lexicographic (kind categories — deterministic).
-    order = pd.to_numeric(pdf["bucket"], errors="coerce")
-    if order.notna().all():
-        pdf = pdf.assign(_ord=order).sort_values("_ord", kind="mergesort")
-    else:
-        pdf = pdf.sort_values("bucket", kind="mergesort")
-    n_a = float(pdf["n_base"].sum())
-    n_b = float(pdf["n_cur"].sum())
-    if n_a == 0 or n_b == 0:
-        # degenerate: one side empty → maximal drift unless both empty
-        stat = 0.0 if (n_a == 0 and n_b == 0) else 1.0
-        d_crit = float("nan")
-        passed = n_a == n_b
-    else:
-        cdf_a = pdf["n_base"].cumsum() / n_a
-        cdf_b = pdf["n_cur"].cumsum() / n_b
-        stat = float((cdf_a - cdf_b).abs().max())
-        d_crit = _KS_C_ALPHA_05 * math.sqrt((n_a + n_b) / (n_a * n_b))
-        passed = stat <= d_crit
-    return pd.DataFrame(
-        [
-            {
-                "constraint_id": cid,
-                "ks_stat": stat,
-                "n_base": int(n_a),
-                "n_cur": int(n_b),
-                "d_crit": d_crit,
-                "passed": bool(passed),
-            }
-        ]
+    grp = ["constraint_id", *keys]
+    w_all = Window.partitionBy(*grp)
+    w_cum = w_all.orderBy("bucket")
+    cdf = aligned.withColumn("constraint_id", F.lit(constraint_id)).select(
+        *grp,
+        F.sum("n_base").over(w_cum).alias("ca"),
+        F.sum("n_cur").over(w_cum).alias("cb"),
+        F.sum("n_base").over(w_all).alias("na"),
+        F.sum("n_cur").over(w_all).alias("nb"),
+    )
+    # ANSI mode raises on a bare `/ 0`: an empty side divides to NULL
+    gap = F.abs(F.try_divide("ca", "na") - F.try_divide("cb", "nb"))
+    tot = cdf.groupBy(*grp, "na", "nb").agg(F.max(gap).alias("_d"))
+    both_empty = (F.col("na") == 0) & (F.col("nb") == 0)
+    one_empty = (F.col("na") == 0) | (F.col("nb") == 0)
+    na, nb = F.col("na").cast("double"), F.col("nb").cast("double")
+    d_crit = F.lit(_KS_C_ALPHA_05) * F.sqrt(F.try_divide(na + nb, na * nb))
+    ks_stat = (
+        F.when(both_empty, F.lit(0.0))
+        .when(one_empty, F.lit(1.0))
+        .otherwise(F.col("_d"))
+    )
+    return tot.select(
+        *grp,
+        ks_stat.alias("ks_stat"),
+        F.col("na").alias("n_base"),
+        F.col("nb").alias("n_cur"),
+        d_crit.alias("d_crit"),
+        F.when(both_empty, F.lit(True))
+        .when(one_empty, F.lit(False))
+        .otherwise(F.col("_d") <= d_crit)
+        .alias("passed"),
     )
 
 
@@ -86,23 +115,34 @@ def ks_from_histograms(
     bucket_col: str,
 ) -> DataFrame:
     """Align two histograms on their bucket key and compute the KS
-    statistic in a grouped-map Arrow UDF."""
-    a = base_hist.select(
-        F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base")
+    statistic with window expressions → one result row (none when
+    both histograms are empty)."""
+    return _ks(_aligned(base_hist, cur_hist, bucket_col), constraint_id)
+
+
+def _drift_ks(
+    base: DataFrame,
+    cur: DataFrame,
+    span_len_bucket_width: int,
+    keys: Sequence[str] = (),
+) -> DataFrame:
+    """Both KS drift constraints per ``keys`` group of the documents."""
+    span_len = _ks(
+        _aligned(
+            span_length_histogram(base, span_len_bucket_width, keys),
+            span_length_histogram(cur, span_len_bucket_width, keys),
+            "bucket",
+            keys,
+        ),
+        C_DRIFT_SPAN_LEN,
+        keys,
     )
-    b = cur_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur"))
-    joined = (
-        a.join(b, "bucket", "full_outer")
-        .select(
-            F.lit(constraint_id).alias("constraint_id"),
-            F.col("bucket").cast("string").alias("bucket"),
-            F.coalesce("n_base", F.lit(0)).alias("n_base"),
-            F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-        )
+    kind_freq = _ks(
+        _aligned(kind_histogram(base, keys), kind_histogram(cur, keys), "kind", keys),
+        C_DRIFT_KIND_FREQ,
+        keys,
     )
-    return joined.groupBy("constraint_id").applyInPandas(
-        lambda pdf: _ks_group(pdf), KS_RESULT_SCHEMA
-    )
+    return span_len.unionByName(kind_freq)
 
 
 def drift_check(
@@ -113,19 +153,7 @@ def drift_check(
     """Run both drift constraints baseline-vs-current → one result row
     per constraint: (constraint_id, ks_stat, n_base, n_cur, d_crit,
     passed)."""
-    span_len = ks_from_histograms(
-        span_length_histogram(baseline_docs, span_len_bucket_width),
-        span_length_histogram(current_docs, span_len_bucket_width),
-        C_DRIFT_SPAN_LEN,
-        "bucket",
-    )
-    kind_freq = ks_from_histograms(
-        kind_histogram(baseline_docs),
-        kind_histogram(current_docs),
-        C_DRIFT_KIND_FREQ,
-        "kind",
-    )
-    return span_len.unionByName(kind_freq)
+    return _drift_ks(baseline_docs, current_docs, span_len_bucket_width)
 
 
 def tv_from_histograms(
@@ -144,14 +172,7 @@ def tv_from_histograms(
     statistic is one aggregate — no Python at all, so this tier also
     serves as the SQL-oracled drift path.
     """
-    a = base_hist.select(
-        F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base")
-    )
-    b = cur_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur"))
-    joined = a.join(b, "bucket", "full_outer").select(
-        F.coalesce("n_base", F.lit(0)).alias("n_base"),
-        F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-    )
+    joined = _aligned(base_hist, cur_hist, bucket_col)
     # whole-frame window over the tiny aggregated histogram (|buckets|
     # rows) to turn counts into probabilities before the final fold.
     # Zero-mass guard (nullif → null division → coalesce 0) keeps the
@@ -212,14 +233,7 @@ def psi_from_histograms(
     <0.1 stable, 0.1–0.25 moderate, >0.25 major shift. Pure
     expressions end-to-end like TV — histograms are the only input, so
     Python never sees data rows."""
-    a = base_hist.select(
-        F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base")
-    )
-    b = cur_hist.select(F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur"))
-    joined = a.join(b, "bucket", "full_outer").select(
-        F.coalesce("n_base", F.lit(0)).alias("n_base"),
-        F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-    )
+    joined = _aligned(base_hist, cur_hist, bucket_col)
     w = Window.partitionBy()
 
     def prop(col: str) -> Column:
@@ -268,9 +282,9 @@ def drift_check_by_partition(
 
     Scale shape is unchanged: distributed groupBy((partition, bucket))
     histograms first — shuffle bounded by |partitions| × |buckets| —
-    then the grouped-map KS over each partition's tiny histogram. The
-    applyInPandas key gains partition_id, so Python still only ever
-    sees histograms.
+    then the same window KS as ``drift_check`` with partition_id added
+    to its window partition. A partition present in only one corpus
+    gets the one-empty-side verdict (ks 1.0, d_crit NULL, fails).
 
     ``partition_col`` names a caller-supplied partition-id column on
     BOTH input frames (any deterministic int key — e.g. an
@@ -279,77 +293,16 @@ def drift_check_by_partition(
     ``stable_partition_id`` (pmod(xxhash64(doc_id), n_buckets))."""
     from ..constraints.core import stable_partition_id
 
-    def hists(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-        if partition_col is None:
-            p = docs.withColumn(
-                "partition_id",
-                stable_partition_id(F.col("doc_id"), n_buckets),
-            )
-        else:
-            p = docs.withColumn(
-                "partition_id", F.col(partition_col).cast("int")
-            )
-        spans = p.select("partition_id", F.explode("spans").alias("s"))
-        span_len = (
-            spans.where(F.col("s.text").isNotNull())
-            .select(
-                "partition_id",
-                (
-                    F.floor(F.length("s.text") / span_len_bucket_width)
-                    * span_len_bucket_width
-                )
-                .cast("long")
-                .alias("bucket"),
-            )
-            .groupBy("partition_id", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        kinds = (
-            spans.select(
-                "partition_id",
-                F.coalesce(F.col("s.kind"), F.lit("<null>")).alias("bucket"),
-            )
-            .groupBy("partition_id", "bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        return span_len, kinds
-
-    base_len, base_kind = hists(baseline_docs)
-    cur_len, cur_kind = hists(current_docs)
-
-    def ks_partitioned(
-        base: DataFrame, cur: DataFrame, constraint_id: str
-    ) -> DataFrame:
-        a = base.select(
-            "partition_id", F.col("bucket"), F.col("n").alias("n_base")
-        )
-        b = cur.select(
-            "partition_id", F.col("bucket"), F.col("n").alias("n_cur")
-        )
-        joined = a.join(b, ["partition_id", "bucket"], "full_outer").select(
-            F.lit(constraint_id).alias("constraint_id"),
-            "partition_id",
-            F.col("bucket").cast("string").alias("bucket"),
-            F.coalesce("n_base", F.lit(0)).alias("n_base"),
-            F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-        )
-        out_schema = (
-            "constraint_id string, partition_id int, ks_stat double, "
-            "n_base long, n_cur long, d_crit double, passed boolean"
-        )
-
-        def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            pid = int(pdf["partition_id"].iloc[0])
-            res = _ks_group(pdf.drop(columns=["partition_id"]))
-            res.insert(1, "partition_id", pid)
-            return res
-
-        return joined.groupBy("constraint_id", "partition_id").applyInPandas(
-            per_group, out_schema
-        )
-
-    return ks_partitioned(base_len, cur_len, C_DRIFT_SPAN_LEN).unionByName(
-        ks_partitioned(base_kind, cur_kind, C_DRIFT_KIND_FREQ)
+    pid = (
+        stable_partition_id(F.col("doc_id"), n_buckets)
+        if partition_col is None
+        else F.col(partition_col).cast("int")
+    )
+    return _drift_ks(
+        baseline_docs.withColumn("partition_id", pid),
+        current_docs.withColumn("partition_id", pid),
+        span_len_bucket_width,
+        ("partition_id",),
     )
 
 
@@ -393,18 +346,10 @@ def emd_from_histograms(
     Degenerate verdicts mirror the TV tier: one empty side = maximal
     drift (emd null, fails); both empty = no evidence (emd 0.0, passes).
     """
-    a = base_hist.select(
-        F.col(bucket_col).cast("long").alias("bucket"),
-        F.col("n").alias("n_base"),
-    )
-    b = cur_hist.select(
-        F.col(bucket_col).cast("long").alias("bucket"),
-        F.col("n").alias("n_cur"),
-    )
-    joined = a.join(b, "bucket", "full_outer").select(
-        "bucket",
-        F.coalesce("n_base", F.lit(0)).cast("long").alias("n_base"),
-        F.coalesce("n_cur", F.lit(0)).cast("long").alias("n_cur"),
+    joined = _aligned(base_hist, cur_hist, bucket_col).select(
+        F.col("bucket").cast("long").alias("bucket"),
+        F.col("n_base").cast("long").alias("n_base"),
+        F.col("n_cur").cast("long").alias("n_cur"),
     )
     w = Window.partitionBy().orderBy("bucket")
     wall = Window.partitionBy()

@@ -18,6 +18,8 @@ via the DuckDB oracle.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -108,31 +110,35 @@ def column_stats(
     )
 
 
-def kind_histogram(docs: DataFrame) -> DataFrame:
-    """Kind-frequency histogram (A3/A12): explode → groupBy(kind).
+def kind_histogram(docs: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
+    """Kind-frequency histogram (A3/A12): explode → groupBy(keys, kind).
     Null kinds are kept as the literal bucket '<null>' so drift sees
     them. Map-side partial aggregation bounds the shuffle to
-    |kinds| × partitions rows regardless of skew."""
+    |keys| × |kinds| × partitions rows regardless of skew."""
     return (
-        docs.select(F.explode("spans").alias("s"))
-        .select(F.coalesce(F.col("s.kind"), F.lit("<null>")).alias("kind"))
-        .groupBy("kind")
+        docs.select(*keys, F.explode("spans").alias("s"))
+        .select(*keys, F.coalesce(F.col("s.kind"), F.lit("<null>")).alias("kind"))
+        .groupBy(*keys, "kind")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
-def span_length_histogram(docs: DataFrame, bucket_width: int = 16) -> DataFrame:
-    """Text span-length histogram bucketed by ``bucket_width`` chars.
-    Feeds the two-sample KS drift check (§2.9)."""
+def span_length_histogram(
+    docs: DataFrame, bucket_width: int = 16, keys: Sequence[str] = ()
+) -> DataFrame:
+    """Text span-length histogram bucketed by ``bucket_width`` chars,
+    one per ``keys`` group. Feeds the two-sample KS drift check
+    (§2.9)."""
     return (
-        docs.select(F.explode("spans").alias("s"))
+        docs.select(*keys, F.explode("spans").alias("s"))
         .where(F.col("s.text").isNotNull())
         .select(
+            *keys,
             (F.floor(F.length("s.text") / bucket_width) * bucket_width)
             .cast("long")
-            .alias("bucket")
+            .alias("bucket"),
         )
-        .groupBy("bucket")
+        .groupBy(*keys, "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 

@@ -41,6 +41,24 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _even_odd_histograms(
+    spark: SparkSession, sf_dir: str, bucket: F.Column
+) -> tuple[DataFrame, DataFrame]:
+    """The drift queries' base/current split of ``documents``: one
+    ``(bucket, n)`` histogram of ``bucket`` over the even doc_ids
+    (baseline) and one over the odd doc_ids (current)."""
+    d = t(spark, sf_dir, "documents").select("doc_id", bucket.alias("bucket"))
+
+    def hist(parity: int) -> DataFrame:
+        return (
+            d.where(F.col("doc_id") % 2 == parity)
+            .groupBy("bucket")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    return hist(0), hist(1)
+
+
 def md5_frac(key: F.Column) -> F.Column:
     """The engine-portable deterministic-sampling fraction: first 8
     md5 hex chars of the key's string form parsed as a uniform 32-bit
@@ -1776,20 +1794,15 @@ def drift_ks_nchars(spark, sf_dir):
     """§2.9 drift with an exact SQL oracle: two-sample KS over the
     n_chars histogram (bucket width 64), baseline = even doc_ids vs
     current = odd doc_ids. Runs the REAL engine path — distributed
-    histogram reduction + applyInPandas KS (operators/drift.py:41-105);
-    the oracle recomputes D = max|CDF_a − CDF_b| with window cumsums.
-    Exact float equality holds because both sides divide exact integer
-    cumsums by exact integer totals in IEEE doubles."""
+    histogram reduction + the window-expression KS
+    (operators/drift.py ``ks_from_histograms``); the oracle recomputes
+    D = max|CDF_a − CDF_b| with the same window cumsums. Exact float
+    equality holds because both sides divide exact integer cumsums by
+    exact integer totals in IEEE doubles."""
     from .operators.drift import ks_from_histograms
 
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id", F.floor(F.col("n_chars") / 64).alias("bucket")
-    )
-    base = d.where(F.col("doc_id") % 2 == 0).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    cur = d.where(F.col("doc_id") % 2 == 1).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n")
+    base, cur = _even_odd_histograms(
+        spark, sf_dir, F.floor(F.col("n_chars") / 64)
     )
     return ks_from_histograms(base, cur, "drift_n_chars", "bucket")
 
@@ -2009,14 +2022,8 @@ def drift_tv_lang(spark, sf_dir):
     last ulp."""
     from .operators.drift import tv_from_histograms
 
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id", F.coalesce("lang", F.lit("<null>")).alias("bucket")
-    )
-    base = d.where(F.col("doc_id") % 2 == 0).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    cur = d.where(F.col("doc_id") % 2 == 1).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n")
+    base, cur = _even_odd_histograms(
+        spark, sf_dir, F.coalesce("lang", F.lit("<null>"))
     )
     res = tv_from_histograms(base, cur, "drift_tv_lang", "bucket")
     return res.select(
@@ -2565,18 +2572,19 @@ def drift_ks_by_partition(spark, sf_dir):
     granularity): documents table lifted to spans, doc_id%3 split,
     one verdict row per (constraint, partition).
 
-    r5 upgrade (r4 VERDICT #3): now EXACTLY SQL-oracled. The engine
-    path is unchanged — distributed per-(partition, bucket) histogram
-    reduction + grouped-map Arrow KS (operators/drift.py:255) — but
-    the partition key is supplied via ``partition_col`` as the
-    SQL-portable ``doc_id % 8`` instead of the default
-    pmod(xxhash64(doc_id), n) that DuckDB cannot replay; the oracle
-    recomputes D = max|CDF_a − CDF_b| per (constraint, partition)
-    with windowed cumsums (the drift_ks_nchars trick). Exact float
-    equality holds: both sides divide exact integer cumsums by exact
-    integer totals in IEEE doubles. The default content-addressed key
-    stays pinned by tests/test_drift.py (per-bucket parity vs the
-    global drift_check)."""
+    Exactly SQL-oracled. The engine path is the production one —
+    distributed per-(partition, bucket) histogram reduction + the
+    window-expression KS (operators/drift.py
+    ``drift_check_by_partition``) — with the partition key supplied
+    via ``partition_col`` as the SQL-portable ``doc_id % 8`` instead
+    of the default pmod(xxhash64(doc_id), n) that DuckDB cannot
+    replay; the oracle recomputes D = max|CDF_a − CDF_b| per
+    (constraint, partition) with windowed cumsums (the
+    drift_ks_nchars trick). Exact float equality holds: both sides
+    divide exact integer cumsums by exact integer totals in IEEE
+    doubles. The default content-addressed key stays pinned by
+    tests/test_drift.py (per-bucket parity vs the global
+    drift_check)."""
     from .operators.drift import drift_check_by_partition
 
     flat = t(spark, sf_dir, "documents")
@@ -3564,14 +3572,8 @@ def drift_emd_nchars(spark, sf_dir):
     (operators/drift.py emd_from_histograms)."""
     from .operators.drift import emd_from_histograms
 
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id", F.floor(F.col("n_chars") / 64).alias("bucket")
-    )
-    base = d.where(F.col("doc_id") % 2 == 0).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    cur = d.where(F.col("doc_id") % 2 == 1).groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n")
+    base, cur = _even_odd_histograms(
+        spark, sf_dir, F.floor(F.col("n_chars") / 64)
     )
     return emd_from_histograms(
         base, cur, "drift_n_chars_emd", "bucket", threshold_num=1, threshold_den=2

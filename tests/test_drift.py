@@ -239,6 +239,75 @@ def test_per_partition_drift_matches_per_partition_recompute(spark):
     assert flagged == {2}
 
 
+def _ks_by_hand(base: dict, cur: dict, order: list) -> float:
+    na, nb = sum(base.values()), sum(cur.values())
+    ca = cb = 0
+    d = 0.0
+    for k in order:
+        ca += base.get(k, 0)
+        cb += cur.get(k, 0)
+        d = max(d, abs(ca / na - cb / nb))
+    return d
+
+
+def test_ks_bucket_order_is_the_bucket_type(spark):
+    """KS takes its CDF in the bucket column's own order: numeric
+    buckets 8 < 16 < 32 < 128, string buckets '128' < '16' < '32' < '8'.
+    The two orders give different statistics on the same counts."""
+    from biosample_enricher_spark.operators.drift import ks_from_histograms
+
+    base = {8: 2, 32: 2}
+    cur = {16: 2, 128: 2}
+    numeric = _ks_by_hand(base, cur, [8, 16, 32, 128])
+    lexical = _ks_by_hand(base, cur, [128, 16, 32, 8])
+    assert (numeric, lexical) == (0.5, 1.0)
+
+    def hist(h, typ):
+        cast = str if typ == "string" else int
+        return spark.createDataFrame(
+            [(cast(k), n) for k, n in h.items()], f"bucket {typ}, n long"
+        )
+
+    r = ks_from_histograms(hist(base, "long"), hist(cur, "long"), "c", "bucket")
+    assert r.first().ks_stat == numeric
+    r = ks_from_histograms(hist(base, "string"), hist(cur, "string"), "c", "bucket")
+    assert r.first().ks_stat == lexical
+
+
+def test_ks_degenerate_sides(spark):
+    """One empty side is maximal drift with an undefined critical value
+    (ks 1.0, d_crit NULL, fails); two empty sides yield no row; a
+    partition present in only one corpus gets the one-empty verdict."""
+    from pyspark.sql import functions as F
+
+    from biosample_enricher_spark.operators.drift import (
+        drift_check_by_partition,
+        ks_from_histograms,
+    )
+
+    full = _hist(spark, [(0, 3), (16, 5)])
+    empty = _hist(spark, [])
+    for a, b in ((full, empty), (empty, full)):
+        (r,) = ks_from_histograms(a, b, "c", "bucket").collect()
+        assert (r.ks_stat, r.d_crit, r.passed) == (1.0, None, False)
+        assert {r.n_base, r.n_cur} == {0, 8}
+    assert ks_from_histograms(empty, empty, "c", "bucket").collect() == []
+
+    docs = gen_documents(spark, 200, BASE).withColumn(
+        "pid", (F.xxhash64("doc_id") % 2 == 0).cast("int")
+    )
+    rows = drift_check_by_partition(
+        docs, docs.where("pid = 0"), partition_col="pid"
+    ).collect()
+    assert len(rows) == 4  # 2 constraints × 2 partitions
+    for r in rows:
+        if r.partition_id == 1:
+            assert (r.ks_stat, r.d_crit, r.passed, r.n_cur) == (1.0, None, False, 0)
+            assert r.n_base > 0
+        else:
+            assert (r.ks_stat, r.passed) == (0.0, True) and r.d_crit > 0
+
+
 # --- EMD / Wasserstein-1 tier (round 5b) --------------------------------------
 
 

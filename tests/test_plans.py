@@ -132,6 +132,24 @@ def test_udf_path_uses_arrow_not_pickle(spark):
     assert "BatchEvalPython" not in p
 
 
+@pytest.mark.parametrize("by_partition", [False, True], ids=["global", "by_partition"])
+def test_drift_ks_plan_has_no_python(spark, by_partition):
+    """The KS drift tier is window expressions end to end: no grouped
+    map, scalar Arrow or pickled Python UDF in its executed plan."""
+    from biosample_enricher_spark.operators.drift import (
+        drift_check,
+        drift_check_by_partition,
+    )
+
+    a = gen_documents(spark, 200, GenParams(seed=1))
+    b = gen_documents(spark, 200, GenParams(seed=2))
+    check = drift_check_by_partition if by_partition else drift_check
+    p = final_plan(check(a, b))
+    assert "Window" in p
+    for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert op not in p, op
+
+
 def test_nested_field_pruning_for_referential(spark):
     """The referential probe must not read span text payloads — only
     kind/media_ref reach the scan after nested-schema pruning."""
