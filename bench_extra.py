@@ -6,8 +6,7 @@ Modes:
 
 - ``--registry``: time EVERY registered query at ``$SPARK_GRAFT_SF_DIR``
   (default sf0.1) — ``min`` of ``--repeats`` timed ``.count()`` runs per
-  query, slowest first. The optimization round's per-operator checklist
-  evidence (OPTIMIZATION_r06.md).
+  query, slowest first: per-operator timing evidence.
 - ``--noop NAME``: isolate one query with the noop sink (guide §1.4)
   instead of ``.count()``.
 

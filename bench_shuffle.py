@@ -1,13 +1,14 @@
 #!/usr/bin/env python
 """Per-stage shuffle-volume evidence for the constraint suite.
 
-r4 VERDICT #7: the 100×-scale claims in PLANS.md are plan-shape
-verified (pushdown, salting, broadcast) but shuffle VOLUME was never
-measured beyond the 8M-doc scaling corpus, and the scaling JSONs record
-partition counts only. This harness runs the full suite at a given
-corpus size with the Spark UI's REST status API enabled and reports
-per-stage shuffle read/write bytes, input bytes, and task counts for
-the suite's jobs — so linear-growth claims are measured, not asserted:
+r4 VERDICT #7: the 100×-scale claims are plan-shape verified
+(pushdown, salting, broadcast; pinned in tests/test_plans.py) but
+shuffle VOLUME was never measured beyond the 8M-doc scaling corpus,
+and the scaling JSONs record partition counts only. This harness
+runs the full suite at a given corpus size with the Spark UI's REST
+status API enabled and reports per-stage shuffle read/write bytes,
+input bytes, and task counts for the suite's jobs — so linear-growth
+claims are measured, not asserted:
 
     python bench_shuffle.py --docs 500000  --tag sf0.1
     python bench_shuffle.py --docs 5000000 --tag sf1

@@ -188,7 +188,6 @@ class ResumableRun:
         run_id: str | None = None,
         suite: ConstraintSuite | None = None,
         sketch_columns: tuple[str, ...] = (),
-        sketch_lg_k: int = 12,
     ) -> None:
         self.spark = spark
         self.table = CheckpointTable(spark, checkpoint_path)
@@ -199,7 +198,6 @@ class ResumableRun:
         # "approx_count_distinct via HyperLogLog") ride a sidecar table
         # next to the lineage rows; empty tuple = feature off
         self.sketch_columns = tuple(sketch_columns)
-        self.sketch_lg_k = sketch_lg_k
         self.sketches = SketchTable(
             spark, f"{checkpoint_path.rstrip('/')}_sketches"
         )
@@ -288,10 +286,7 @@ class ResumableRun:
         from .operators.stats import partition_sketch_rows
 
         rows = partition_sketch_rows(
-            todo,
-            self.sketch_columns,
-            n_buckets=self.suite.n_buckets,
-            lg_config_k=self.sketch_lg_k,
+            todo, self.sketch_columns, n_buckets=self.suite.n_buckets
         )
         return rows.select(
             F.lit(self.run_id).alias("run_id"),

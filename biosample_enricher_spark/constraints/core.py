@@ -74,10 +74,8 @@ class ConstraintSuite:
         self,
         n_buckets: int = N_BUCKETS_DEFAULT,
         use_arrow_udf: bool = True,
-        check_uniqueness: bool = True,
         referential_mode: str = "broadcast",
         bloom_m_bits: int = 1 << 24,
-        bloom_k: int = 5,
     ) -> None:
         if referential_mode not in ("broadcast", "bloom"):
             # ValueError, not assert: under python -O an assert is
@@ -93,10 +91,8 @@ class ConstraintSuite:
                 "which was removed; the Arrow UDF is the only row path"
             )
         self.n_buckets = n_buckets
-        self.check_uniqueness = check_uniqueness
         self.referential_mode = referential_mode
         self.bloom_m_bits = bloom_m_bits
-        self.bloom_k = bloom_k
 
     # --- pieces -------------------------------------------------------------
 
@@ -131,7 +127,7 @@ class ConstraintSuite:
         a pathologically hot doc_id contributes at most one partial row
         per map task to the shuffle — the same bound the previous
         explicit (salt, doc_id) stage provided, minus that stage's extra
-        Exchange (r6: 2 Exchanges → 1, verified in plans/r06).
+        Exchange (one Exchange, pinned in tests/test_plans.py).
         Reference analog: ID dedup semantics
         (``/root/reference/biosample_enricher/adapters.py:327-338``).
         """
@@ -211,7 +207,6 @@ class ConstraintSuite:
                 catalog_keys,
                 "media_ref",
                 m_bits=self.bloom_m_bits,
-                k=self.bloom_k,
             )
         else:
             dangling = media.join(
@@ -230,9 +225,7 @@ class ConstraintSuite:
     # --- suite --------------------------------------------------------------
 
     def active_constraints(self, with_referential: bool) -> list[str]:
-        ids = list(ROW_CONSTRAINTS)
-        if self.check_uniqueness:
-            ids.append(C_DOC_ID_UNIQUE)
+        ids = [*ROW_CONSTRAINTS, C_DOC_ID_UNIQUE]
         if with_referential:
             ids.append(C_MEDIA_REF_REFERENTIAL)
         return ids
@@ -242,7 +235,7 @@ class ConstraintSuite:
         docs_p: DataFrame,
         violations: DataFrame,
         with_referential: bool,
-        dups: DataFrame | None = None,
+        dups: DataFrame,
     ) -> DataFrame:
         """Per-(constraint, partition) pass/fail summary.
 
@@ -253,10 +246,10 @@ class ConstraintSuite:
         one violation of the constraint. Shape follows the reference's
         validation_summary (``synthetic_validation_demo.py:96-113``).
 
-        Scale note: when the uniqueness stage's duplicate keys are
-        available (``dups``), the distinct count per partition is
-        derived as ``count(*) − Σ(n−1)`` over the (tiny) duplicate set
-        — a map-side-combined row count instead of a corpus-wide
+        ``total`` is ``count(*) − Σ(n−1)`` per partition, with the
+        correction taken from ``dups``, the uniqueness stage's
+        ``duplicate_keys`` output: a map-side-combined row count plus
+        a join with the (tiny) duplicate set, instead of a corpus-wide
         distinct hash aggregation (which would build per-task hash
         tables of every doc_id and spill at scale).
 
@@ -266,33 +259,28 @@ class ConstraintSuite:
         ``stable_partition_id(n_buckets)``, so an unrelated
         ``partition_id`` column would mis-join.
         """
-        if dups is not None:
-            row_counts = docs_p.groupBy("partition_id").agg(
-                F.count(F.lit(1)).alias("_n_rows")
+        row_counts = docs_p.groupBy("partition_id").agg(
+            F.count(F.lit(1)).alias("_n_rows")
+        )
+        extra = (
+            dups.select(
+                stable_partition_id(F.col("doc_id"), self.n_buckets).alias(
+                    "partition_id"
+                ),
+                (F.col("n") - 1).alias("_extra"),
             )
-            extra = (
-                dups.select(
-                    stable_partition_id(F.col("doc_id"), self.n_buckets).alias(
-                        "partition_id"
-                    ),
-                    (F.col("n") - 1).alias("_extra"),
-                )
-                .groupBy("partition_id")
-                .agg(F.sum("_extra").alias("_extra"))
+            .groupBy("partition_id")
+            .agg(F.sum("_extra").alias("_extra"))
+        )
+        totals = (
+            row_counts.join(F.broadcast(extra), "partition_id", "left")
+            .select(
+                "partition_id",
+                (
+                    F.col("_n_rows") - F.coalesce(F.col("_extra"), F.lit(0))
+                ).alias("total"),
             )
-            totals = (
-                row_counts.join(F.broadcast(extra), "partition_id", "left")
-                .select(
-                    "partition_id",
-                    (
-                        F.col("_n_rows") - F.coalesce(F.col("_extra"), F.lit(0))
-                    ).alias("total"),
-                )
-            )
-        else:
-            totals = docs_p.groupBy("partition_id").agg(
-                F.countDistinct("doc_id").alias("total")
-            )
+        )
         # constraint × partition grid via a literal-array explode — pure
         # JVM; a local createDataFrame here would pay Python-runner
         # startup (~seconds) for a 7-row dimension
@@ -334,21 +322,15 @@ class ConstraintSuite:
         violations are tiny relative to the corpus (call
         ``SuiteResult.unpersist()`` when done)."""
         docs_p = self.with_partition_id(docs)
-        dups = None
-        persisted: list[DataFrame] = []
-        out = self.row_violations(docs_p)
-        if self.check_uniqueness:
-            # duplicate keys are tiny (violations only); persisting them
-            # lets both the violation rows and the summary's
-            # distinct-doc totals reuse one aggregation
-            dups = self.duplicate_keys(docs_p).persist()
-            persisted.append(dups)
-            out = out.unionByName(self.uniqueness_violations_from(dups))
+        # duplicate keys are tiny (violations only); persisting them
+        # lets both the violation rows and the summary's distinct-doc
+        # totals reuse one aggregation
+        dups = self.duplicate_keys(docs_p).persist()
+        out = self.row_violations(docs_p).unionByName(
+            self.uniqueness_violations_from(dups)
+        )
         if asset_catalog is not None:
             out = out.unionByName(self.referential_violations(docs_p, asset_catalog))
         out = out.persist()
-        persisted.append(out)
-        summary = self.summarize(docs_p, out, asset_catalog is not None, dups=dups)
-        return SuiteResult(
-            violations=out, summary=summary, persisted=tuple(persisted)
-        )
+        summary = self.summarize(docs_p, out, asset_catalog is not None, dups)
+        return SuiteResult(violations=out, summary=summary, persisted=(dups, out))

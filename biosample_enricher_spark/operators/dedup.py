@@ -1001,7 +1001,14 @@ def prefix_filtered_jaccard(
     (``den·|A∩B| ≥ num·|A∪B|``) — no float boundary, bit-identical
     verdicts in any ANSI-SQL oracle. Returns
     ``(id_a, id_b, n_inter, n_a, n_b, jaccard)`` with ``id_a < id_b``;
-    ``jaccard`` is one exact-integer division.
+    ``jaccard`` is one exact-integer division. Shingle arrays are
+    treated as sets: repeated shingles count once.
+
+    The result is EAGER: a local checkpoint, already materialized when
+    this returns, with no lineage behind it (a lost executor block
+    cannot be recomputed). The caller owns its blocks and frees them
+    with ``free_local_checkpoint(result)`` once done; each call that
+    is not freed keeps its result blocks for the session's lifetime.
 
     Reference analog: set-based duplicate semantics of
     ``/root/reference/biosample_enricher/adapters.py:327-338``, here
@@ -1040,16 +1047,20 @@ def prefix_filtered_jaccard_from(
     ARRAYS and computes ``|A∩B|`` with one ``array_intersect`` per pair
     — replacing the exploded index⋈index join + groupBy whose
     intermediate was Σ|A| over candidate pairs (~35M skinny rows at
-    sf0.1, the old query's dominant shuffle; arrays are distinct by
-    construction so intersection size is the exact overlap count). The
-    size joins disappear too: ``n_a``/``n_b`` read off the attached
-    arrays.
+    sf0.1, the old query's dominant shuffle). ``sh`` is deduplicated
+    with ``array_distinct`` before the checkpoint, so every consumer
+    sees sets: the intersection size is the exact overlap count, and
+    ``n_a``/``n_b``, the doc-frequency counts and the prefix ranks
+    count each shingle once. The size joins disappear too:
+    ``n_a``/``n_b`` read off the attached arrays.
 
     Returns an EAGER (checkpointed) frame: the result is materialized,
     then the shingle checkpoint is freed before returning — repeated
     invocations leak only the (small) result block set, the er2 /
     connected_components lifecycle."""
-    sh_ck = sh.localCheckpoint(eager=True)
+    sh_ck = sh.select(
+        "doc_id", F.array_distinct("sh").alias("sh")
+    ).localCheckpoint(eager=True)
     prefix_ck = None
     try:
         sizes = sh_ck.select("doc_id", F.size("sh").alias("n_sh"))

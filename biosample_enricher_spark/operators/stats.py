@@ -175,12 +175,15 @@ def top_k_examples(docs: DataFrame, k: int = 5, salt_buckets: int = 32) -> DataF
 
 # --- mergeable distinct-count sketches (HLL, datasketches-compatible) ---------
 
+# log2 of the HLL bucket count for every per-partition sketch, the
+# checkpoint sidecar's included
+HLL_LG_K = 12
+
 
 def partition_sketch_rows(
     docs: DataFrame,
     columns: tuple[str, ...],
     n_buckets: int = N_BUCKETS_DEFAULT,
-    lg_config_k: int = 12,
 ) -> DataFrame:
     """One HLL sketch per (content partition, column) — every column in
     a single wide aggregation (map-side partial sketches; the shuffle
@@ -193,7 +196,7 @@ def partition_sketch_rows(
     )
     wide = docs_p.groupBy("partition_id").agg(
         *[
-            F.hll_sketch_agg(F.col(c), F.lit(lg_config_k)).alias(f"_s{i}")
+            F.hll_sketch_agg(F.col(c), F.lit(HLL_LG_K)).alias(f"_s{i}")
             for i, c in enumerate(columns)
         ]
     )
@@ -218,13 +221,12 @@ def partition_distinct_sketches(
     docs: DataFrame,
     col: str = "doc_id",
     n_buckets: int = N_BUCKETS_DEFAULT,
-    lg_config_k: int = 12,
 ) -> DataFrame:
     """Per-content-partition HyperLogLog sketches for ``col`` —
     ``(partition_id, sketch binary, estimate)``.
 
     The 10^12-row upgrade over a one-shot ``approx_count_distinct``:
-    sketches are MERGEABLE state, sized O(2^lg_config_k) bytes each, so
+    sketches are MERGEABLE state, sized O(2^HLL_LG_K) bytes each, so
     they persist to the checkpoint table next to the per-partition
     lineage rows and a resumed/incremental run unions them WITHOUT
     rescanning completed partitions (north_star: "approx_count_distinct
@@ -232,9 +234,7 @@ def partition_distinct_sketches(
     distinct counts from scratch each run, schema_statistics.py:78-86).
     ``F.hll_sketch_agg`` emits Apache DataSketches-compatible binaries,
     readable outside Spark."""
-    return partition_sketch_rows(
-        docs, (col,), n_buckets, lg_config_k
-    ).select(
+    return partition_sketch_rows(docs, (col,), n_buckets).select(
         "partition_id",
         "sketch",
         F.hll_sketch_estimate("sketch").alias("estimate"),

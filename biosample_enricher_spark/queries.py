@@ -481,7 +481,7 @@ def a13_uniqueness_violations(spark, sf_dir):
     aggregation pre-counts per physical partition map-side, so a hot
     key ships at most one partial row per map task — the same skew
     bound the previous explicit (salt, key) two-stage gave, without
-    its second Exchange (r6: 2 Exchanges → 1, plans/r06)."""
+    its second Exchange (one Exchange, pinned in tests/test_plans.py)."""
     li = t(spark, sf_dir, "lineitem").select(F.col("l_orderkey").alias("key"))
     return (
         li.groupBy("key")
@@ -6537,7 +6537,7 @@ def streaming_dedup_watermark(spark, sf_dir):
     ``dropDuplicatesWithinWatermark`` over the incremental file
     source, the state-TTL-bounded form of exactly-once key dedup (the
     built-in sibling of the custom applyInPandasWithState uniqueness
-    surface: that one carries per-key metadata and a hand-rolled TTL;
+    surface: that one keeps a per-key counter that never expires;
     this one is the engine-native state store with watermark-driven
     eviction — both now externally checked). A deterministic dup key
     (event_id div 2 — consecutive event pairs, seconds apart, far
@@ -8698,7 +8698,7 @@ def x17_split_decontamination(spark, sf_dir):
 # commit regardless of this order.
 
 DRIVER_WINDOW: list[str] = [
-    # round-6 rotation (see WINDOW_COVERAGE.md). Priority order:
+    # round-6 rotation. Priority order:
     # (1) all 48 queries that registered after the r5 window filled
     #     (batches r5f-r5o) and have NEVER had an external
     #     CORRECTNESS row (r5 VERDICT #1) — in registration order;

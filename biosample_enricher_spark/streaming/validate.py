@@ -6,8 +6,8 @@ the SAME ``ConstraintSuite.row_violations`` runs unchanged under
 ``readStream`` — violations stream out with exactly-once semantics via
 the sink checkpoint. This mirrors how the reference's per-record
 validation would sit behind a queue consumer, re-expressed as Spark's
-incremental file source (``maxFilesPerTrigger`` bounds a micro-batch;
-``availableNow`` drains a backlog and stops — the test/driver mode).
+incremental file source (``availableNow`` drains a backlog and stops —
+the test/driver mode).
 
 Late data: ``windowed_violation_counts`` demonstrates the stateful
 tier — event-time windows + watermark over the violation stream, the
@@ -32,19 +32,10 @@ from ..spec import (
 )
 
 
-def stream_documents(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
+def stream_documents(spark: SparkSession, path: str) -> DataFrame:
     """Incremental parquet source for the interleaved-documents shape.
-    ``path`` may be a directory or a glob (a single file works too).
-    ``max_files_per_trigger`` bounds micro-batch size — the streaming
-    analog of ``spark.sql.files.maxPartitionBytes`` backpressure."""
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    ``path`` may be a directory or a glob (a single file works too)."""
+    return spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(path)
 
 
 def streaming_violations(
@@ -83,7 +74,6 @@ def windowed_violation_counts(
 def streaming_duplicate_violations(
     docs: DataFrame,
     n_buckets: int = N_BUCKETS_DEFAULT,
-    state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """In-stream doc_id uniqueness: the stateful tier the row-scope
     projection can't cover (``streaming_violations`` docstring notes
@@ -94,10 +84,10 @@ def streaming_duplicate_violations(
     once, and survives checkpoint resume (pinned in
     tests/test_streaming.py).
 
-    State size is one long per distinct in-flight doc_id; pass
-    ``state_ttl_ms`` to expire idle keys with a processing-time timeout
-    (the 100 TB-ingest bound — dupes older than the TTL fall back to
-    the batch/resume uniqueness pass, which is authoritative).
+    State is one long per distinct doc_id the stream has seen, kept
+    for the life of the checkpoint: nothing expires it, so it grows
+    with the number of distinct doc_ids. The batch suite's uniqueness
+    pass stays authoritative.
 
     Message diverges from the batch tier deliberately: batch knows the
     final total ("duplicate doc_id: N occurrences"); a stream only
@@ -109,17 +99,8 @@ def streaming_duplicate_violations(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     cols = [f.name for f in VIOLATIONS_SCHEMA.fields]
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
 
     def track(key: tuple, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
         (doc_id,) = key
         seen = state.get[0] if state.exists else 0
         out: list[pd.DataFrame] = []
@@ -149,8 +130,6 @@ def streaming_duplicate_violations(
                 )
             seen += len(pids)
         state.update((seen,))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
         yield (
             pd.concat(out, ignore_index=True)
             if out
@@ -166,7 +145,7 @@ def streaming_duplicate_violations(
         outputStructType=VIOLATIONS_SCHEMA,
         stateStructType="seen long",
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -185,7 +164,6 @@ def run_streaming_validation(
     checkpoint_path: str,
     n_buckets: int = N_BUCKETS_DEFAULT,
     with_uniqueness: bool = False,
-    state_ttl_ms: int | None = None,
 ):
     """Drain-and-stop deployment shape: stream the input backlog,
     validate, append violation rows to a parquet sink with
@@ -200,7 +178,7 @@ def run_streaming_validation(
     out = streaming_violations(docs, n_buckets)
     if with_uniqueness:
         out = out.unionByName(
-            streaming_duplicate_violations(docs, n_buckets, state_ttl_ms)
+            streaming_duplicate_violations(docs, n_buckets)
         )
     q = (
         out.writeStream.format("parquet")

@@ -931,6 +931,18 @@ def test_prefix_filtered_jaccard_thresholds(spark):
     assert {(r["id_a"], r["id_b"]) for r in exact} == {(1, 3)}
 
 
+def test_prefix_filtered_jaccard_treats_shingles_as_sets(spark):
+    """A repeated shingle counts once: [x, x, y] and [x, y] are the
+    same set, so their Jaccard is 1.0, not 2/3."""
+    docs = spark.createDataFrame(
+        [(1, ["x", "x", "y"]), (2, ["x", "y"])], "doc_id long, sh array<string>"
+    )
+    out = D.prefix_filtered_jaccard(docs, "doc_id", F.col("sh"), 3, 5)
+    rows = [(r.id_a, r.id_b, r.n_inter, r.n_a, r.n_b, r.jaccard) for r in out.collect()]
+    D.free_local_checkpoint(out)
+    assert rows == [(1, 2, 2, 2, 2, 1.0)]
+
+
 def test_prefix_join_is_smaller_than_full_index(spark):
     """The scale claim: the prefix candidate join emits strictly fewer
     pairs than the full index join on a corpus with a hot shingle

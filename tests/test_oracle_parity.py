@@ -115,8 +115,8 @@ def test_driver_window_ordering():
 
 
 def test_registry_counts_match_docs():
-    """The registry counts stated in the docs (ROUND5_NOTES.md,
-    SURVEY.md §2.14, .claude/skills/verify/SKILL.md, README.md) are
+    """The registry counts stated in the docs (SURVEY.md §2.14,
+    .claude/skills/verify/SKILL.md, README.md) are
     pinned here so they cannot silently drift from the registry (r3
     verdict item #7). Whoever registers a query updates the asserts
     AND the doc sites in the same commit; README's statement that its

@@ -39,7 +39,7 @@ def _arrow_batch_size(spark, small):
 
 
 def _row_viols(spark, docs, small_arrow_batches=False):
-    suite = ConstraintSuite(check_uniqueness=False)
+    suite = ConstraintSuite()
     df = suite.row_violations(suite.with_partition_id(docs))
     with _arrow_batch_size(spark, small_arrow_batches):
         rows = df.collect()

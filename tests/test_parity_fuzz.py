@@ -68,7 +68,7 @@ def test_fuzzed_docs_match_oracle(spark, batch):
         {"doc_id": f"doc-{i:04d}", "spans": spans} for i, spans in enumerate(batch)
     ]
     df = spark.createDataFrame(rows, DOCUMENTS_SCHEMA)
-    suite = ConstraintSuite(check_uniqueness=False)
+    suite = ConstraintSuite()
     got = sorted(
         (r.doc_id, r.constraint_id, r.field, r.message)
         for r in suite.row_violations(suite.with_partition_id(df)).collect()

@@ -30,6 +30,11 @@ def optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def size_in_bytes(df) -> int:
+    """The optimizer's size estimate, the one join selection reads."""
+    return df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+
+
 def test_filter_pushdown_and_column_pruning(spark):
     df = QUERIES["s1_scan_filter_project"](spark, SF)
     p = plan(df)
@@ -52,6 +57,50 @@ def test_referential_is_broadcast_left_anti(spark):
     suite = ConstraintSuite()
     p = plan(suite.referential_violations(suite.with_partition_id(docs), cat))
     assert "BroadcastHashJoin" in p and "LeftAnti" in p
+
+
+def test_no_stats_build_side_plans_sort_merge_join(spark):
+    """The session sets ``preferSortMergeJoin=false``: the static
+    planner picks a shuffled hash join when a side's size estimate
+    shows it fits a per-partition hash map. A side with no size
+    statistics shows nothing, so joined to the corpus it must plan a
+    SortMergeJoin. The thresholds are scaled so the test corpus is too
+    big to build on, as a real corpus is; a side whose statistics do
+    fit still gets the hash join, so the pin is not vacuous."""
+    assert spark.conf.get("spark.sql.join.preferSortMergeJoin") == "false"
+    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "n_chars")
+    # an RDD-backed frame has no statistics: its estimate is the
+    # spark.sql.defaultSizeInBytes fallback (Long.MaxValue)
+    no_stats = spark.createDataFrame(docs.rdd, "doc_id long, n2 long")
+    assert size_in_bytes(no_stats) == 2**63 - 1
+    corpus = size_in_bytes(docs)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # 8 B a row: corpus/5, under the hash-map bound (threshold × n =
+    # corpus/2) and over the broadcast bound (corpus/2n)
+    fits = spark.range(corpus // 40).withColumnRenamed("id", "doc_id")
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(corpus // (2 * n)))
+    try:
+        for how in ("inner", "left"):
+            p = plan(docs.join(no_stats, "doc_id", how))
+            assert "SortMergeJoin" in p and "HashJoin" not in p, how
+        assert "ShuffledHashJoin" in plan(docs.join(fits, "doc_id"))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_uniqueness_is_one_exchange(spark):
+    """The doc_id uniqueness check and its registry twin (a13) are one
+    hash aggregation: partial counts map-side, one hash Exchange."""
+    docs = gen_documents(spark, 200, GenParams(seed=1))
+    suite = ConstraintSuite()
+    for df in (
+        suite.duplicate_keys(suite.with_partition_id(docs)),
+        QUERIES["a13_uniqueness_violations"](spark, SF),
+    ):
+        p = plan(df)
+        assert p.count("Exchange hashpartitioning") == 1
+        assert "partial_count" in p
 
 
 @pytest.mark.parametrize("seeded", [False, True], ids=["fresh", "existing"])
@@ -150,13 +199,11 @@ def test_drift_ks_plan_has_no_python(spark, by_partition):
         assert op not in p, op
 
 
-def test_nested_field_pruning_for_referential(spark):
+def test_nested_field_pruning_for_referential(spark, tmp_path):
     """The referential probe must not read span text payloads — only
     kind/media_ref reach the scan after nested-schema pruning."""
-    docs_path = "/tmp/plans_docs_parquet"
-    gen_documents(spark, 300, GenParams(seed=2)).write.mode("overwrite").parquet(
-        docs_path
-    )
+    docs_path = str(tmp_path / "docs")
+    gen_documents(spark, 300, GenParams(seed=2)).write.parquet(docs_path)
     docs = spark.read.parquet(docs_path)
     cat = gen_asset_catalog(spark, GenParams(seed=2))
     suite = ConstraintSuite()
@@ -186,7 +233,7 @@ def test_simhash_signature_path_is_jvm_only(spark):
     assert "EvalPython" not in p
 
 
-def test_ivf_probe_scan_is_partition_pruned(spark):
+def test_ivf_probe_scan_is_partition_pruned(spark, tmp_path):
     """ivf_build materializes lists partitioned by centroid_id; the
     probe's filter must reach the scan as PartitionFilters (only
     nprobe/n_centroids directories listed) and its results must equal
@@ -202,7 +249,7 @@ def test_ivf_probe_scan_is_partition_pruned(spark):
         .withColumn("embedding", F.col("embedding").cast("array<double>"))
     )
     q = emb.where(F.col("vec_id") == 0).first().embedding
-    path = "/tmp/ivf_index_plans_test"
+    path = str(tmp_path / "ivf_index")
     cents = ivf_build(emb, path, n_centroids=8)
     probe = ivf_probe(spark, path, cents, list(q), k=10, nprobe=3)
 
@@ -216,7 +263,7 @@ def test_ivf_probe_scan_is_partition_pruned(spark):
     ]
 
 
-def test_bucketed_join_has_no_shuffle(spark):
+def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     """Two tables bucketed on the join key must SortMergeJoin with NO
     Exchange on either side (the repeated-large-join layout for 100 TB;
     broadcast disabled to prove it's the bucketing, not a small side)."""
@@ -231,8 +278,8 @@ def test_bucketed_join_has_no_shuffle(spark):
     enrich = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", F.length("text").alias("text_len")
     )
-    write_bucketed(docs, "b_docs", "/tmp/bucketed_docs", "doc_id", 8)
-    write_bucketed(enrich, "b_enrich", "/tmp/bucketed_enrich", "doc_id", 8)
+    write_bucketed(docs, "b_docs", str(tmp_path / "bucketed_docs"), "doc_id", 8)
+    write_bucketed(enrich, "b_enrich", str(tmp_path / "bucketed_enrich"), "doc_id", 8)
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -3,8 +3,6 @@ engine's rows exactly; windowed rollups respect watermarked state."""
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,13 +15,15 @@ from biosample_enricher_spark.streaming import (
 )
 from biosample_enricher_spark.synth import GenParams, gen_documents
 
-BASE = "/tmp/streaming_test"
+
+@pytest.fixture(scope="module")
+def base(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("streaming"))
 
 
 @pytest.fixture(scope="module")
-def corpus_dir(spark):
-    path = f"{BASE}/corpus"
-    shutil.rmtree(BASE, ignore_errors=True)
+def corpus_dir(spark, base):
+    path = f"{base}/corpus"
     # several files so the incremental source has multiple splits
     gen_documents(spark, 3_000, GenParams(seed=9)).repartition(6).write.mode(
         "overwrite"
@@ -32,7 +32,7 @@ def corpus_dir(spark):
 
 
 def _batch_rows(spark, path):
-    suite = ConstraintSuite(check_uniqueness=False)
+    suite = ConstraintSuite()
     docs = spark.read.parquet(path)
     return sorted(
         (r.partition_id, r.doc_id, r.constraint_id, r.field, r.message)
@@ -40,9 +40,9 @@ def _batch_rows(spark, path):
     )
 
 
-def test_streaming_matches_batch_exactly(spark, corpus_dir):
-    out = f"{BASE}/viol_out"
-    cp = f"{BASE}/viol_cp"
+def test_streaming_matches_batch_exactly(spark, base, corpus_dir):
+    out = f"{base}/viol_out"
+    cp = f"{base}/viol_cp"
     run_streaming_validation(spark, corpus_dir, out, cp)
     got = sorted(
         (r.partition_id, r.doc_id, r.constraint_id, r.field, r.message)
@@ -53,13 +53,13 @@ def test_streaming_matches_batch_exactly(spark, corpus_dir):
     assert got == expected
 
 
-def test_streaming_resume_is_exactly_once(spark, corpus_dir):
+def test_streaming_resume_is_exactly_once(spark, base, corpus_dir):
     """Re-running availableNow against the same checkpoint must add
     nothing: the file-source offsets are committed, so a drained
     backlog is never re-validated (the streaming analog of the batch
     checkpoint's cache-HIT partitions)."""
-    out = f"{BASE}/viol_out2"
-    cp = f"{BASE}/viol_cp2"
+    out = f"{base}/viol_out2"
+    cp = f"{base}/viol_cp2"
     run_streaming_validation(spark, corpus_dir, out, cp)
     n1 = spark.read.parquet(out).count()
     run_streaming_validation(spark, corpus_dir, out, cp)
@@ -94,7 +94,7 @@ def test_windowed_violation_counts_with_watermark(spark, corpus_dir):
         for r in spark.table("winviol").collect()
     }
 
-    suite = ConstraintSuite(check_uniqueness=False)
+    suite = ConstraintSuite()
     bdocs = spark.read.parquet(corpus_dir)
     bviol = suite.row_violations(suite.with_partition_id(bdocs)).withColumn(
         "event_ts",
@@ -115,15 +115,15 @@ def test_windowed_violation_counts_with_watermark(spark, corpus_dir):
     assert len(got) >= 10  # multiple windows actually exercised
 
 
-def test_clean_backlog_empty_sink_reads_as_zero(spark):
+def test_clean_backlog_empty_sink_reads_as_zero(spark, base):
     """ADVICE r2: a violation-free corpus leaves only _spark_metadata
     in the sink dir; read_violations must return 0 rows with the
     pinned schema instead of failing parquet schema inference."""
     from biosample_enricher_spark.streaming import read_violations
 
-    corpus = f"{BASE}/clean_corpus"
-    out = f"{BASE}/clean_out"
-    cp = f"{BASE}/clean_cp"
+    corpus = f"{base}/clean_corpus"
+    out = f"{base}/clean_out"
+    cp = f"{base}/clean_cp"
     gen_documents(spark, 500, GenParams(seed=11).clean()).write.mode(
         "overwrite"
     ).parquet(corpus)
@@ -164,7 +164,7 @@ def _drain_uniqueness(spark, src, out, cp):
     q.awaitTermination()
 
 
-def test_streaming_uniqueness_across_microbatches(spark):
+def test_streaming_uniqueness_across_microbatches(spark, base):
     """A duplicate arriving in a LATER micro-batch must yield exactly
     one violation row, and state must survive a checkpoint resume: a
     post-resume duplicate continues the occurrence count instead of
@@ -174,9 +174,7 @@ def test_streaming_uniqueness_across_microbatches(spark):
 
     from biosample_enricher_spark.streaming import read_violations
 
-    base = f"{BASE}/uniq"
-    src, out, cp = f"{base}/src", f"{base}/out", f"{base}/cp"
-    shutil.rmtree(base, ignore_errors=True)
+    src, out, cp = f"{base}/uniq/src", f"{base}/uniq/out", f"{base}/uniq/cp"
     os.makedirs(src)
     now = time.time()
     # f1: doc-3 duplicated WITHIN one batch; f2/f3: dupes across batches
@@ -214,14 +212,14 @@ def test_streaming_uniqueness_across_microbatches(spark):
     assert new == sorted(got + [("doc-3", "duplicate doc_id: occurrence 5")])
 
 
-def test_streaming_with_uniqueness_union_sink(spark, corpus_dir):
+def test_streaming_with_uniqueness_union_sink(spark, base, corpus_dir):
     """--stream-uniqueness deployment shape: row-scope violations and
     stateful dedup rows land in ONE sink from one query; the row-scope
     subset still equals the batch engine exactly."""
     from biosample_enricher_spark.streaming import read_violations
 
-    out = f"{BASE}/union_out"
-    cp = f"{BASE}/union_cp"
+    out = f"{base}/union_out"
+    cp = f"{base}/union_cp"
     run_streaming_validation(spark, corpus_dir, out, cp,
                              with_uniqueness=True)
     rows = read_violations(spark, out).collect()
