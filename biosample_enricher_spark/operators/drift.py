@@ -8,16 +8,18 @@ categorization (``/root/reference/biosample_enricher/weather/metrics.py:
 (``random_sampling_demo.py:607-640``) — re-expressed as a statistical
 test instead of hand-binned categories.
 
-Scale shape: the raw corpora are first reduced to tiny histogram tables
-by distributed ``groupBy(bucket).count()`` (map-side partial agg bounds
-the shuffle to |buckets| × partitions rows — skew-immune). Every
-statistic then starts from one alignment step (``_aligned``: a
-full-outer join of the two histograms with zero-filled counts) and is
-computed by window expressions and one aggregate over the aligned
-rows — no Python anywhere. The weighted two-sample KS on binned data
-is exact for the binned distributions: D = max_bucket |CDF_a - CDF_b|,
-with the CDF taken in the bucket column's own order (numeric buckets
-numerically, string buckets lexicographically).
+Scale shape: each drift statistic starts from one alignment step
+(``_aligned``): both sides' ``(bucket, n)`` rows are unioned, each count
+in its own side's column, and summed in one ``groupBy(bucket)`` whose
+map-side partial aggregation bounds the shuffle to |buckets| ×
+partitions rows (skew-immune) for histograms and raw items alike. The
+KS drift check feeds it one explode of each side's spans, so it reads
+each side once. The statistic is then window expressions and one
+aggregate over the aligned rows — no join, no Python. The weighted
+two-sample KS on binned data is exact for the binned distributions:
+D = max_bucket |CDF_a - CDF_b|, with the CDF taken in the bucket
+column's own order (numeric buckets numerically, string buckets
+lexicographically).
 
 The pass threshold uses the standard large-sample critical value
 D_crit = c(alpha) * sqrt((n_a + n_b) / (n_a * n_b)), c(0.05) ≈ 1.358.
@@ -31,7 +33,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..spec import C_DRIFT_KIND_FREQ, C_DRIFT_SPAN_LEN
-from .stats import kind_histogram, span_length_histogram
 
 _KS_C_ALPHA_05 = 1.3581015157406195  # sqrt(-0.5 * ln(0.05/2))
 
@@ -42,41 +43,54 @@ def _aligned(
     bucket_col: str,
     keys: Sequence[str] = (),
 ) -> DataFrame:
-    """Full-outer join of two ``(keys..., bucket_col, n)`` histograms on
-    ``keys + bucket`` → ``(keys..., bucket, n_base, n_cur)`` with the
-    count of a bucket missing on one side filled with 0."""
-    a = base_hist.select(
-        *keys, F.col(bucket_col).alias("bucket"), F.col("n").alias("n_base")
-    )
-    b = cur_hist.select(
-        *keys, F.col(bucket_col).alias("bucket"), F.col("n").alias("n_cur")
-    )
-    return a.join(b, [*keys, "bucket"], "full_outer").select(
-        *keys,
-        "bucket",
-        F.coalesce("n_base", F.lit(0)).alias("n_base"),
-        F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
+    """Align two ``(keys..., bucket_col, n)`` frames → ``(keys...,
+    bucket, n_base, n_cur)`` by one union-and-sum: each side's ``n``
+    goes in its own column with 0 in the other's, and one
+    ``groupBy(keys..., bucket)`` sums both. Inputs may be histograms or
+    raw items with ``n = 1``. As in a SQL ``GROUP BY``, a NULL bucket
+    is one bucket: NULL on both sides aligns into one row."""
+
+    def side(df: DataFrame, n_base: Column, n_cur: Column) -> DataFrame:
+        bucket = F.col(bucket_col).alias("bucket")
+        return df.select(*keys, bucket, n_base.alias("n_base"), n_cur.alias("n_cur"))
+
+    return (
+        side(base_hist, F.col("n"), F.lit(0))
+        .unionByName(side(cur_hist, F.lit(0), F.col("n")))
+        .groupBy(*keys, "bucket")
+        .agg(F.sum("n_base").alias("n_base"), F.sum("n_cur").alias("n_cur"))
     )
 
 
-def _ks(aligned: DataFrame, constraint_id: str, keys: Sequence[str] = ()) -> DataFrame:
-    """Weighted two-sample KS per ``keys`` group of aligned histogram
-    rows → ``(constraint_id, keys..., ks_stat, n_base, n_cur, d_crit,
-    passed)``.
+def _share(col: str) -> Column:
+    """An aligned row's share of its side's total, over a whole-frame
+    window of the aligned rows (|buckets| rows, not the corpus). A side
+    of zero mass shares 0.0 (nullif → NULL division → coalesce). The
+    window is ordered so that a later float sum adds its terms in bucket
+    order, not in the order the alignment's aggregation emits them."""
+    w = Window.orderBy("bucket").rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    return F.coalesce(F.col(col) / F.nullif(F.sum(col).over(w), F.lit(0)), F.lit(0.0))
 
-    One window pass per group, ordered by the bucket in its own type:
-    integer cumulative counts ``ca``/``cb`` and totals ``na``/``nb``,
-    then ``ks_stat = max |ca/na − cb/nb|`` — exact integer cumsums
-    divided by exact integer totals in IEEE doubles, so any SQL engine
-    replays it bit for bit. Degenerate groups: one empty side is
-    maximal drift (ks 1.0, d_crit NULL, fails); both sides empty
-    yields no row, because grouping by the ``constraint_id`` literal
-    over no rows yields no group.
+
+def _ks(aligned: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
+    """Weighted two-sample KS per ``(constraint_id, keys...)`` group of
+    aligned rows, ``constraint_id`` being a column → ``(constraint_id,
+    keys..., ks_stat, n_base, n_cur, d_crit, passed)``.
+
+    One window pass per group, ordered by the bucket in its own type (a
+    struct field by field): integer cumulative counts ``ca``/``cb`` and
+    totals ``na``/``nb``, then ``ks_stat = max |ca/na − cb/nb|`` — exact
+    integer cumsums divided by exact integer totals in IEEE doubles, so
+    any SQL engine replays it bit for bit. Degenerate groups: one empty
+    side is maximal drift (ks 1.0, d_crit NULL, fails); both sides
+    empty yields no row, because no aligned row carries that group.
     """
     grp = ["constraint_id", *keys]
     w_all = Window.partitionBy(*grp)
     w_cum = w_all.orderBy("bucket")
-    cdf = aligned.withColumn("constraint_id", F.lit(constraint_id)).select(
+    cdf = aligned.select(
         *grp,
         F.sum("n_base").over(w_cum).alias("ca"),
         F.sum("n_cur").over(w_cum).alias("cb"),
@@ -117,7 +131,8 @@ def ks_from_histograms(
     """Align two histograms on their bucket key and compute the KS
     statistic with window expressions → one result row (none when
     both histograms are empty)."""
-    return _ks(_aligned(base_hist, cur_hist, bucket_col), constraint_id)
+    aligned = _aligned(base_hist, cur_hist, bucket_col)
+    return _ks(aligned.withColumn("constraint_id", F.lit(constraint_id)))
 
 
 def _drift_ks(
@@ -126,23 +141,31 @@ def _drift_ks(
     span_len_bucket_width: int,
     keys: Sequence[str] = (),
 ) -> DataFrame:
-    """Both KS drift constraints per ``keys`` group of the documents."""
-    span_len = _ks(
-        _aligned(
-            span_length_histogram(base, span_len_bucket_width, keys),
-            span_length_histogram(cur, span_len_bucket_width, keys),
-            "bucket",
-            keys,
-        ),
-        C_DRIFT_SPAN_LEN,
-        keys,
-    )
-    kind_freq = _ks(
-        _aligned(kind_histogram(base, keys), kind_histogram(cur, keys), "kind", keys),
-        C_DRIFT_KIND_FREQ,
-        keys,
-    )
-    return span_len.unionByName(kind_freq)
+    """Both KS drift constraints per ``keys`` group of the documents.
+
+    One explode of each side's ``spans`` emits ``(keys...,
+    constraint_id, bucket, n = 1)`` items: a kind item per span and a
+    span-length item per text span. The bucket is a ``struct<len long,
+    kind string>`` whose other constraint's field is NULL, so one KS
+    window orders lengths numerically and kinds lexicographically."""
+    s, width = F.col("s"), span_len_bucket_width
+    length = (F.floor(F.length(s.text) / width) * width).cast("long")
+
+    def item(cid: str, len_: Column, kind: Column) -> Column:
+        bucket = F.struct(len_.alias("len"), kind.alias("kind"))
+        return F.struct(F.lit(cid).alias("constraint_id"), bucket.alias("bucket"))
+
+    no_len, no_kind = F.lit(None).cast("long"), F.lit(None).cast("string")
+    len_item = F.when(s.text.isNotNull(), item(C_DRIFT_SPAN_LEN, length, no_kind))
+    kind_item = item(C_DRIFT_KIND_FREQ, no_len, F.coalesce(s.kind, F.lit("<null>")))
+    items = F.filter(F.array(len_item, kind_item), lambda i: i.isNotNull())
+
+    def side(docs: DataFrame) -> DataFrame:
+        exploded = docs.select(*keys, F.explode("spans").alias("s"))
+        return exploded.select(*keys, F.inline(items), F.lit(1).alias("n"))
+
+    aligned = _aligned(side(base), side(cur), "bucket", ("constraint_id", *keys))
+    return _ks(aligned, keys)
 
 
 def drift_check(
@@ -168,32 +191,15 @@ def tv_from_histograms(
     Order-independent (unlike KS, whose statistic depends on the bucket
     ordering — fine for span lengths, arguable for categorical kind
     frequencies; SURVEY.md §2.9 note). Pure expressions end-to-end: the
-    histogram alignment is a full-outer join on the bucket key and the
+    histogram alignment is one aggregation on the bucket key and the
     statistic is one aggregate — no Python at all, so this tier also
     serves as the SQL-oracled drift path.
     """
-    joined = _aligned(base_hist, cur_hist, bucket_col)
-    # whole-frame window over the tiny aggregated histogram (|buckets|
-    # rows) to turn counts into probabilities before the final fold.
-    # Zero-mass guard (nullif → null division → coalesce 0) keeps the
-    # per-bucket math defined; the degenerate verdicts are pinned
-    # explicitly below: one empty side = maximal drift (tv 1.0, fails),
-    # both empty = no evidence of drift (tv 0.0, passes) — never a null
-    # passed column.
-    w = Window.partitionBy()
-    probs = joined.select(
-        "n_base",
-        "n_cur",
-        (
-            F.coalesce(
-                F.col("n_base") / F.nullif(F.sum("n_base").over(w), F.lit(0)),
-                F.lit(0.0),
-            )
-            - F.coalesce(
-                F.col("n_cur") / F.nullif(F.sum("n_cur").over(w), F.lit(0)),
-                F.lit(0.0),
-            )
-        ).alias("pdiff"),
+    # the degenerate verdicts are pinned explicitly below: one empty
+    # side = maximal drift (tv 1.0, fails), both empty = no evidence of
+    # drift (tv 0.0, passes) — never a null passed column
+    probs = _aligned(base_hist, cur_hist, bucket_col).select(
+        "n_base", "n_cur", (_share("n_base") - _share("n_cur")).alias("pdiff")
     )
     tot = probs.groupBy().agg(
         F.coalesce(F.sum("n_base"), F.lit(0)).alias("na"),
@@ -233,20 +239,14 @@ def psi_from_histograms(
     <0.1 stable, 0.1–0.25 moderate, >0.25 major shift. Pure
     expressions end-to-end like TV — histograms are the only input, so
     Python never sees data rows."""
-    joined = _aligned(base_hist, cur_hist, bucket_col)
-    w = Window.partitionBy()
 
     def prop(col: str) -> Column:
-        raw = F.coalesce(
-            F.col(col) / F.nullif(F.sum(col).over(w), F.lit(0)), F.lit(0.0)
-        )
+        raw = _share(col)
         return F.when(raw <= 0, F.lit(float(eps))).otherwise(raw)
 
     p, q = prop("n_base"), prop("n_cur")
-    scored = joined.select(
-        "n_base",
-        "n_cur",
-        ((p - q) * F.log(p / q)).alias("contrib"),
+    scored = _aligned(base_hist, cur_hist, bucket_col).select(
+        "n_base", "n_cur", ((p - q) * F.log(p / q)).alias("contrib")
     )
     tot = scored.groupBy().agg(
         F.coalesce(F.sum("n_base"), F.lit(0)).alias("na"),
@@ -280,11 +280,11 @@ def drift_check_by_partition(
     corpus-global verdict (and the checkpoint table can carry drift
     lineage rows next to the row-scope ones).
 
-    Scale shape is unchanged: distributed groupBy((partition, bucket))
-    histograms first — shuffle bounded by |partitions| × |buckets| —
-    then the same window KS as ``drift_check`` with partition_id added
-    to its window partition. A partition present in only one corpus
-    gets the one-empty-side verdict (ks 1.0, d_crit NULL, fails).
+    Same scale shape as ``drift_check``, with partition_id added to
+    the alignment's grouping (shuffle bounded by |partitions| ×
+    |buckets|) and to the KS window partition. A partition present in
+    only one corpus gets the one-empty-side verdict (ks 1.0, d_crit
+    NULL, fails).
 
     ``partition_col`` names a caller-supplied partition-id column on
     BOTH input frames (any deterministic int key — e.g. an
@@ -346,14 +346,14 @@ def emd_from_histograms(
     Degenerate verdicts mirror the TV tier: one empty side = maximal
     drift (emd null, fails); both empty = no evidence (emd 0.0, passes).
     """
-    joined = _aligned(base_hist, cur_hist, bucket_col).select(
+    aligned = _aligned(base_hist, cur_hist, bucket_col).select(
         F.col("bucket").cast("long").alias("bucket"),
         F.col("n_base").cast("long").alias("n_base"),
         F.col("n_cur").cast("long").alias("n_cur"),
     )
     w = Window.partitionBy().orderBy("bucket")
     wall = Window.partitionBy()
-    terms = joined.select(
+    terms = aligned.select(
         F.sum("n_base").over(w).alias("ca"),
         F.sum("n_cur").over(w).alias("cb"),
         (F.coalesce(F.lead("bucket").over(w), F.col("bucket")) - F.col("bucket"))

@@ -18,8 +18,6 @@ via the DuckDB oracle.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -110,35 +108,31 @@ def column_stats(
     )
 
 
-def kind_histogram(docs: DataFrame, keys: Sequence[str] = ()) -> DataFrame:
-    """Kind-frequency histogram (A3/A12): explode → groupBy(keys, kind).
-    Null kinds are kept as the literal bucket '<null>' so drift sees
-    them. Map-side partial aggregation bounds the shuffle to
-    |keys| × |kinds| × partitions rows regardless of skew."""
+def kind_histogram(docs: DataFrame) -> DataFrame:
+    """Kind-frequency histogram (A3/A12): explode → groupBy(kind).
+    Null kinds are kept as the literal bucket '<null>', as the drift
+    check's kind items keep them. Map-side partial aggregation bounds
+    the shuffle to |kinds| × partitions rows regardless of skew."""
     return (
-        docs.select(*keys, F.explode("spans").alias("s"))
-        .select(*keys, F.coalesce(F.col("s.kind"), F.lit("<null>")).alias("kind"))
-        .groupBy(*keys, "kind")
+        docs.select(F.explode("spans").alias("s"))
+        .select(F.coalesce(F.col("s.kind"), F.lit("<null>")).alias("kind"))
+        .groupBy("kind")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
-def span_length_histogram(
-    docs: DataFrame, bucket_width: int = 16, keys: Sequence[str] = ()
-) -> DataFrame:
+def span_length_histogram(docs: DataFrame, bucket_width: int = 16) -> DataFrame:
     """Text span-length histogram bucketed by ``bucket_width`` chars,
-    one per ``keys`` group. Feeds the two-sample KS drift check
-    (§2.9)."""
+    the buckets the span-length drift check (§2.9) compares."""
     return (
-        docs.select(*keys, F.explode("spans").alias("s"))
+        docs.select(F.explode("spans").alias("s"))
         .where(F.col("s.text").isNotNull())
         .select(
-            *keys,
             (F.floor(F.length("s.text") / bucket_width) * bucket_width)
             .cast("long")
             .alias("bucket"),
         )
-        .groupBy(*keys, "bucket")
+        .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 

@@ -14,6 +14,9 @@ which the driver checks rows-only).
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -99,6 +102,16 @@ def _drain_to_memory(df: DataFrame, prefix: str, tag: str, mode: str) -> DataFra
 
 def _sf_tag(sf_dir: str) -> str:
     return sf_dir.rstrip("/").rsplit("/", 1)[-1]
+
+
+def _scratch_dir(name: str, sf_dir: str) -> str:
+    """A new ``<name>_<sf>_*`` directory per call, removed at interpreter
+    exit: a query's lazy result still reads it after the query returns,
+    and a fixed path would let a second call or session delete it under
+    the first."""
+    path = tempfile.mkdtemp(prefix=f"{name}_{_sf_tag(sf_dir).replace('.', '_')}_")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 # =====================================================================
@@ -1683,8 +1696,7 @@ def ann_ivf_build_probe(spark, sf_dir):
         "embedding", F.col("embedding").cast("array<double>")
     )
     qvec = emb.where(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"/tmp/bes_ivf_index_{sf_tag}"
+    path = _scratch_dir("bes_ivf_index", sf_dir)
     cents = ivf_build(emb, path, n_centroids=16)
     approx = ivf_probe(spark, path, cents, list(qvec), k=10, nprobe=4)
     return _quantify_topk(approx, emb, list(qvec), 10)
@@ -2260,7 +2272,6 @@ def streaming_uniqueness(spark, sf_dir):
     oracle, unlike most stateful streaming ops. Cross-batch resume
     semantics are pinned separately in tests/test_streaming.py."""
     import os
-    import shutil
     import time
 
     from .streaming import streaming_duplicate_violations
@@ -2269,15 +2280,8 @@ def streaming_uniqueness(spark, sf_dir):
         F.format_string("doc-%012d", F.col("doc_id")).alias("doc_id"),
         (F.col("doc_id") % 3 == 0).alias("is_dup"),
     )
-    import uuid
-
-    sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1].replace(".", "_")
-    # per-invocation unique dir: a fixed path raced concurrent sessions
-    # (driver + pytest) — one rmtree could delete a source file another
-    # session's availableNow drain was still reading
-    run_tag = f"{sf_tag}_{uuid.uuid4().hex[:12]}"
-    base = f"/tmp/stream_uniq_{run_tag}"
-    shutil.rmtree(base, ignore_errors=True)
+    base = _scratch_dir("stream_uniq", sf_dir)
+    run_tag = os.path.basename(base).removeprefix("stream_uniq_")
     src = f"{base}/src"
     flat.select("doc_id").coalesce(1).write.parquet(f"{src}/b1")
     flat.where("is_dup").select("doc_id").coalesce(1).write.parquet(
@@ -7314,7 +7318,7 @@ def j12_bucketed_join(spark, sf_dir):
     shuffle permanently).
     The ORACLE is the plain join, so the external row checks that the
     bucketed layout preserves join semantics exactly. The write
-    happens per run (idempotent overwrite) — in production the layout
+    happens per run, to a new directory — in production the layout
     is written once and amortized over every later join."""
     from .sources.bucketed import read_table, write_bucketed
 
@@ -7324,12 +7328,9 @@ def j12_bucketed_join(spark, sf_dir):
         F.col("l_orderkey"),
         F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
     )
-    write_bucketed(
-        orders, f"bkt_orders_{tag}", f"/tmp/bkt_{tag}/orders", "o_orderkey", 8
-    )
-    write_bucketed(
-        li, f"bkt_li_{tag}", f"/tmp/bkt_{tag}/lineitem", "l_orderkey", 8
-    )
+    base = _scratch_dir("bkt", sf_dir)
+    write_bucketed(orders, f"bkt_orders_{tag}", f"{base}/orders", "o_orderkey", 8)
+    write_bucketed(li, f"bkt_li_{tag}", f"{base}/lineitem", "l_orderkey", 8)
     bo = read_table(spark, f"bkt_orders_{tag}")
     bl = read_table(spark, f"bkt_li_{tag}")
     return (
@@ -8376,16 +8377,12 @@ def streaming_foreachbatch_sink(spark, sf_dir):
     epoch id (the exactly-once idiom: batch-id-scoped writes make
     replays idempotent), then the SINK OUTPUT is read back and
     aggregated — so the oracle checks the full write-then-read round
-    trip, not just the in-memory stream result. Fresh checkpoint +
-    truncated sink dir per run keep the query re-runnable (a
+    trip, not just the in-memory stream result. A fresh checkpoint
+    and sink dir per run keep the query re-runnable (a
     PRODUCTION checkpoint would instead persist so restarts resume;
     that behavior is covered by checkpoint.py's batch S11 tier)."""
-    import shutil
-    import tempfile
-
     schema = t(spark, sf_dir, "events").schema
-    out_dir = f"/tmp/fb_sink_{_sf_tag(sf_dir).replace('.', '_')}"
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = _scratch_dir("fb_sink", sf_dir)
     cp = tempfile.mkdtemp(prefix="fb_cp_")
     stream = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.*")
 
@@ -8405,10 +8402,8 @@ def streaming_foreachbatch_sink(spark, sf_dir):
         .start()
     )
     q_stream.awaitTermination()
-    # the per-run checkpoint is only needed while draining — remove
-    # it so repeated invocations don't accumulate /tmp directories
-    # (the sink dir must outlive the return: the result reads it
-    # lazily; it is truncated by the NEXT run instead)
+    # the per-run checkpoint is only needed while draining; the sink
+    # dir outlives the return because the result reads it lazily
     shutil.rmtree(cp, ignore_errors=True)
     return (
         spark.read.parquet(out_dir)
@@ -8445,10 +8440,7 @@ def s13_csv_roundtrip(spark, sf_dir):
     bit-exactly through CSV while floats are a formatting minefield
     (the cents discipline extended to interchange formats). The
     j12/zo1 write-then-read query pattern."""
-    import shutil
-
-    path = f"/tmp/csv_rt_{_sf_tag(sf_dir).replace('.', '_')}"
-    shutil.rmtree(path, ignore_errors=True)
+    path = _scratch_dir("csv_rt", sf_dir)
     d = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",

@@ -182,7 +182,7 @@ def main(argv: list[str]) -> None:
 
     if args.baseline:
         base = spark.read.parquet(args.baseline)
-        drift_rows = drift_check(base, docs).collect()
+        drift_rows = drift_check(base, docs).orderBy("constraint_id").collect()
         report["drift"] = [
             {
                 "constraint_id": r.constraint_id,
@@ -225,7 +225,9 @@ def main(argv: list[str]) -> None:
             flagged = [
                 {"constraint_id": r.constraint_id,
                  "partition_id": r.partition_id, "ks_stat": r.ks_stat}
-                for r in per_part.where(~F.col("passed")).collect()
+                for r in per_part.where(~F.col("passed"))
+                .orderBy("constraint_id", "partition_id")
+                .collect()
             ]
             report["drift_partitions_flagged"] = flagged
             report["drift_partitions_checked"] = per_part.count()

@@ -308,6 +308,27 @@ def test_ks_degenerate_sides(spark):
             assert (r.ks_stat, r.passed) == (0.0, True) and r.d_crit > 0
 
 
+def test_null_bucket_on_both_sides_is_one_bucket(spark):
+    """As in a SQL ``GROUP BY``, a NULL bucket aligns with the other
+    side's NULL bucket: identical histograms that each carry one are
+    no drift under KS, TV and PSI."""
+    from biosample_enricher_spark.operators.drift import (
+        ks_from_histograms,
+        psi_from_histograms,
+        tv_from_histograms,
+    )
+
+    def hist():
+        return spark.createDataFrame([("a", 10), (None, 5)], "bucket string, n long")
+
+    (ks,) = ks_from_histograms(hist(), hist(), "c", "bucket").collect()
+    (tv,) = tv_from_histograms(hist(), hist(), "c", "bucket").collect()
+    (psi,) = psi_from_histograms(hist(), hist(), "c", "bucket").collect()
+    assert (ks.ks_stat, ks.n_base, ks.n_cur, ks.passed) == (0.0, 15, 15, True)
+    assert (tv.tv_stat, tv.n_base, tv.n_cur, tv.passed) == (0.0, 15, 15, True)
+    assert (psi.psi_stat, psi.passed) == (0.0, True)
+
+
 # --- EMD / Wasserstein-1 tier (round 5b) --------------------------------------
 
 

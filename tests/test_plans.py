@@ -197,6 +197,35 @@ def test_drift_ks_plan_has_no_python(spark, by_partition):
     assert "Window" in p
     for op in ("FlatMapGroupsInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert op not in p, op
+    # both sides align in one aggregation, never a join
+    for op in ("Join", "SortMergeJoin"):
+        assert op not in p, op
+
+
+@pytest.mark.parametrize("by_partition", [False, True], ids=["global", "by_partition"])
+def test_drift_reads_each_parquet_side_once(spark, tmp_path, by_partition):
+    """Both KS constraints come from one explode per side: the final
+    plan scans each parquet side exactly once."""
+    from biosample_enricher_spark.operators.drift import (
+        drift_check,
+        drift_check_by_partition,
+    )
+
+    sides = {}
+    for name, seed in (("base", 1), ("cur", 2)):
+        path = str(tmp_path / name)
+        gen_documents(spark, 200, GenParams(seed=seed)).write.parquet(path)
+        sides[name] = spark.read.parquet(path)
+    check = drift_check_by_partition if by_partition else drift_check
+    p = final_plan(check(sides["base"], sides["cur"]))
+    scans = [
+        line
+        for line in p.split("== Initial Plan ==")[0].splitlines()
+        if "FileScan parquet" in line
+    ]
+    for name in sides:
+        assert sum(f"{tmp_path / name}]" in line for line in scans) == 1, scans
+    assert len(scans) == 2, scans
 
 
 def test_nested_field_pruning_for_referential(spark, tmp_path):

@@ -16,6 +16,14 @@ def test_csv_roundtrip_preserves_every_row(spark):
     assert n_back == n_src == 15000
 
 
+def test_csv_roundtrip_result_survives_a_second_call(spark):
+    """The result reads its CSV lazily, so each call writes its own
+    directory: a second call must not delete the first result's files."""
+    first = QUERIES["s13_csv_roundtrip"](spark, SF01)
+    second = QUERIES["s13_csv_roundtrip"](spark, SF01)
+    assert first.collect() == second.collect()
+
+
 def test_nullsafe_join_keeps_null_group_plain_join_drops_it(spark):
     rows = QUERIES["j14_nullsafe_join"](spark, SF01).collect()
     nulls = [r for r in rows if r.nk is None]

@@ -42,3 +42,26 @@ def test_resumed_synthesize_run_reports_skipped_buckets(spark, tmp_path, capsys)
     report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert report["partitions_skipped"] == 5
     assert report["partitions_processed"] == 11
+
+
+def test_baseline_drift_report_is_sorted(spark, tmp_path, capsys):
+    """With --baseline and --drift-by-partition the report lists the
+    global drift rows by constraint_id and the flagged partitions by
+    (constraint_id, partition_id)."""
+    base = str(tmp_path / "base")
+    shifted = GenParams(seed=7, text_len_base=24, text_len_spread=48)
+    gen_documents(spark, 400, shifted).write.parquet(base)
+
+    _load_job().main([
+        "--synthesize", "400", "--checkpoint", str(tmp_path / "cp"),
+        "--run-id", "drift", "--n-buckets", "16",
+        "--baseline", base, "--drift-by-partition",
+    ])
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    ids = [d["constraint_id"] for d in report["drift"]]
+    assert ids == sorted(ids) and len(ids) == 2
+    flagged = [
+        (f["constraint_id"], f["partition_id"])
+        for f in report["drift_partitions_flagged"]
+    ]
+    assert len(flagged) > 1 and flagged == sorted(flagged)
