@@ -22,6 +22,10 @@ that later lineage appends cannot change. Partitions are the stable content-addr
 ``constraints.core``, so a resume at a different executor count
 processes exactly the same remaining documents.
 
+This table is the engine's only per-partition store: a run's exact
+distinct-doc count is a sum over its lineage rows
+(``ResumableRun.distinct_docs``), not a second table of sketches.
+
 Storage is a parquet directory with an Iceberg-like append-only table
 surface (``CheckpointTable``). On a cluster with an Iceberg catalog the
 same API maps to ``writeTo(...).append()``; the sandbox has no Iceberg
@@ -33,13 +37,12 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .constraints.core import ConstraintSuite, stable_partition_id
-from .spec import N_BUCKETS_DEFAULT
+from .spec import C_KIND_VOCAB
 
 CHECKPOINT_SCHEMA = T.StructType(
     [
@@ -53,53 +56,6 @@ CHECKPOINT_SCHEMA = T.StructType(
         T.StructField("finished_at", T.TimestampType()),
     ]
 )
-
-
-SKETCH_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("column", T.StringType(), False),
-        T.StructField("sketch", T.BinaryType()),
-        T.StructField("finished_at", T.TimestampType()),
-    ]
-)
-
-
-class SketchTable:
-    """Sidecar to the checkpoint table: one mergeable HLL distinct
-    sketch per (run, partition, column). A resumed or incremental run
-    unions these instead of recounting completed partitions; duplicate
-    appends for a reprocessed partition are harmless because HLL union
-    is idempotent (register-wise max)."""
-
-    def __init__(self, spark: SparkSession, path: str) -> None:
-        from .sources import resolve_table_io
-
-        self.spark = spark
-        self.path = path
-        self._io = resolve_table_io(spark, path, schema=SKETCH_SCHEMA)
-
-    def read(self) -> DataFrame:
-        return self._io.read()
-
-    def append(self, rows: DataFrame) -> None:
-        self._io.append(rows.select([f.name for f in SKETCH_SCHEMA.fields]))
-
-    def distinct_estimates(self, run_id: str) -> DataFrame:
-        """Merged distinct-count estimate per column across every
-        partition sketched so far for ``run_id`` — no data rescan."""
-        return (
-            self.read()
-            .where(F.col("run_id") == run_id)
-            .groupBy("column")
-            .agg(
-                F.count_distinct("partition_id").alias("n_partitions"),
-                F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias(
-                    "estimate"
-                ),
-            )
-        )
 
 
 class CheckpointTable:
@@ -187,20 +143,12 @@ class ResumableRun:
         checkpoint_path: str,
         run_id: str | None = None,
         suite: ConstraintSuite | None = None,
-        sketch_columns: tuple[str, ...] = (),
     ) -> None:
         self.spark = spark
         self.table = CheckpointTable(spark, checkpoint_path)
         self.run_id = run_id or uuid.uuid4().hex
         self.suite = suite or ConstraintSuite()
         self.partitions_skipped = 0  # size of the frontier pending() resolved
-        # per-partition HLL distinct sketches (north_star:
-        # "approx_count_distinct via HyperLogLog") ride a sidecar table
-        # next to the lineage rows; empty tuple = feature off
-        self.sketch_columns = tuple(sketch_columns)
-        self.sketches = SketchTable(
-            spark, f"{checkpoint_path.rstrip('/')}_sketches"
-        )
 
     def pending(self, docs: DataFrame, with_referential: bool = False) -> DataFrame:
         """Documents in not-yet-completed partitions, as of this call.
@@ -232,19 +180,11 @@ class ResumableRun:
         asset_catalog: DataFrame | None = None,
         violations_path: str | None = None,
     ) -> DataFrame:
-        """Validate all pending partitions; append lineage; return the
-        summary of the work done in THIS invocation (empty if resumed
-        past the end)."""
+        """Validate all pending partitions; append one lineage row per
+        (bucket, constraint), whose ``n_rows`` is the bucket's distinct
+        doc count; return the summary of the work done in THIS
+        invocation (empty if resumed past the end)."""
         todo = self.pending(docs, with_referential=asset_catalog is not None)
-        # todo feeds both the suite and the sketch pass — persist so
-        # --sketch-distinct does not rescan the pending input, unless it
-        # is cached already: pending() returns the caller's docs as-is
-        # when no bucket is done, and their cache is theirs to release
-        cache_todo = (
-            bool(self.sketch_columns) and todo.storageLevel == StorageLevel.NONE
-        )
-        if cache_todo:
-            todo = todo.persist()
         result = self.suite.run(todo, asset_catalog)
         if violations_path is not None:
             # dynamic partition overwrite keyed by partition_id: a crash
@@ -263,41 +203,35 @@ class ResumableRun:
         # frames, which result.unpersist() below releases before the
         # caller collects it.
         summary = result.summary.localCheckpoint(eager=True)
-        # sketches BEFORE lineage: a crash between the two appends then
-        # leaves these partitions pending, and their re-run sketches
-        # union idempotently; the reverse order would mark them done
-        # with no sketch
-        if self.sketch_columns:
-            self.sketches.append(self._sketch_rows(todo))
         self.table.append(checkpoint_rows_from_summary(summary, self.run_id))
         # release the suite's persisted blocks (violations + dups) now
         # that the summary is materialized — repeated/resumed runs in a
         # long-lived session must not accumulate cached frames
         result.unpersist()
-        if cache_todo:
-            todo.unpersist()
         return summary
 
-    def _sketch_rows(self, todo: DataFrame) -> DataFrame:
-        """Sidecar rows for this invocation's pending documents —
-        delegates to the shared per-partition sketch machinery
-        (operators/stats.py::partition_sketch_rows) so sketch
-        precision lives in one place."""
-        from .operators.stats import partition_sketch_rows
+    def distinct_docs(self) -> DataFrame:
+        """Exact distinct-doc count over every bucket this ``run_id`` has
+        finished, across all its invocations → one row ``(n_partitions,
+        n_docs)``, read from the lineage rows alone (no document scan).
 
-        rows = partition_sketch_rows(
-            todo, self.sketch_columns, n_buckets=self.suite.n_buckets
+        A summary's ``total`` is the bucket's distinct doc_id count, and
+        equal doc_ids share a content-addressed bucket, so the per-bucket
+        totals of one constraint add up to the corpus-wide distinct
+        count. A bucket whose lineage append was cut short stays pending,
+        and its retry appends a second row for it; the latest one
+        counts."""
+        latest = (
+            self.table.read()
+            .where(
+                (F.col("run_id") == self.run_id)
+                & (F.col("constraint_id") == C_KIND_VOCAB)
+                & (F.col("status") != "failed")
+            )
+            .groupBy("partition_id")
+            .agg(F.max_by("n_rows", "finished_at").alias("n_rows"))
         )
-        return rows.select(
-            F.lit(self.run_id).alias("run_id"),
-            "partition_id",
-            "column",
-            "sketch",
-            F.current_timestamp().alias("finished_at"),
+        return latest.agg(
+            F.count(F.lit(1)).alias("n_partitions"),
+            F.coalesce(F.sum("n_rows"), F.lit(0)).cast("long").alias("n_docs"),
         )
-
-    def distinct_estimates(self) -> DataFrame:
-        """Merged HLL distinct estimates per sketched column across
-        everything this run_id has processed so far (incl. previous
-        interrupted invocations) — no rescan of completed partitions."""
-        return self.sketches.distinct_estimates(self.run_id)

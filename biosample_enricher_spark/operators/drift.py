@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..spec import C_DRIFT_KIND_FREQ, C_DRIFT_SPAN_LEN
+from .stats import kind_bucket, span_length_bucket
 
 _KS_C_ALPHA_05 = 1.3581015157406195  # sqrt(-0.5 * ln(0.05/2))
 
@@ -135,37 +136,39 @@ def ks_from_histograms(
     return _ks(aligned.withColumn("constraint_id", F.lit(constraint_id)))
 
 
-def _drift_ks(
+def _drift_aligned(
     base: DataFrame,
     cur: DataFrame,
     span_len_bucket_width: int,
     keys: Sequence[str] = (),
 ) -> DataFrame:
-    """Both KS drift constraints per ``keys`` group of the documents.
+    """The two KS drift constraints' aligned rows per ``keys`` group of
+    the documents → ``(constraint_id, keys..., bucket, n_base, n_cur)``.
 
     One explode of each side's ``spans`` emits ``(keys...,
     constraint_id, bucket, n = 1)`` items: a kind item per span and a
-    span-length item per text span. The bucket is a ``struct<len long,
-    kind string>`` whose other constraint's field is NULL, so one KS
-    window orders lengths numerically and kinds lexicographically."""
-    s, width = F.col("s"), span_len_bucket_width
-    length = (F.floor(F.length(s.text) / width) * width).cast("long")
+    span-length item per text span, bucketed by ``stats.kind_bucket``
+    and ``stats.span_length_bucket`` as the two histograms are. The
+    bucket is a ``struct<len long, kind string>`` whose other
+    constraint's field is NULL, so one KS window orders lengths
+    numerically and kinds lexicographically."""
+    s = F.col("s")
+    length = span_length_bucket(s.text, span_len_bucket_width)
 
     def item(cid: str, len_: Column, kind: Column) -> Column:
         bucket = F.struct(len_.alias("len"), kind.alias("kind"))
         return F.struct(F.lit(cid).alias("constraint_id"), bucket.alias("bucket"))
 
     no_len, no_kind = F.lit(None).cast("long"), F.lit(None).cast("string")
-    len_item = F.when(s.text.isNotNull(), item(C_DRIFT_SPAN_LEN, length, no_kind))
-    kind_item = item(C_DRIFT_KIND_FREQ, no_len, F.coalesce(s.kind, F.lit("<null>")))
+    len_item = F.when(length.isNotNull(), item(C_DRIFT_SPAN_LEN, length, no_kind))
+    kind_item = item(C_DRIFT_KIND_FREQ, no_len, kind_bucket(s.kind))
     items = F.filter(F.array(len_item, kind_item), lambda i: i.isNotNull())
 
     def side(docs: DataFrame) -> DataFrame:
         exploded = docs.select(*keys, F.explode("spans").alias("s"))
         return exploded.select(*keys, F.inline(items), F.lit(1).alias("n"))
 
-    aligned = _aligned(side(base), side(cur), "bucket", ("constraint_id", *keys))
-    return _ks(aligned, keys)
+    return _aligned(side(base), side(cur), "bucket", ("constraint_id", *keys))
 
 
 def drift_check(
@@ -176,7 +179,7 @@ def drift_check(
     """Run both drift constraints baseline-vs-current → one result row
     per constraint: (constraint_id, ks_stat, n_base, n_cur, d_crit,
     passed)."""
-    return _drift_ks(baseline_docs, current_docs, span_len_bucket_width)
+    return _ks(_drift_aligned(baseline_docs, current_docs, span_len_bucket_width))
 
 
 def tv_from_histograms(
@@ -298,12 +301,14 @@ def drift_check_by_partition(
         if partition_col is None
         else F.col(partition_col).cast("int")
     )
-    return _drift_ks(
+    keys = ("partition_id",)
+    aligned = _drift_aligned(
         baseline_docs.withColumn("partition_id", pid),
         current_docs.withColumn("partition_id", pid),
         span_len_bucket_width,
-        ("partition_id",),
+        keys,
     )
+    return _ks(aligned, keys)
 
 
 def emd_from_histograms(

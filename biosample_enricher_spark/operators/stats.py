@@ -18,7 +18,7 @@ via the DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..constraints.core import stable_partition_id
@@ -108,30 +108,40 @@ def column_stats(
     )
 
 
+def kind_bucket(kind: Column) -> Column:
+    """A span's kind-frequency bucket: its kind, a NULL kind kept as the
+    literal bucket '<null>'. Shared by ``kind_histogram`` and the kind
+    drift check."""
+    return F.coalesce(kind, F.lit("<null>"))
+
+
+def span_length_bucket(text: Column, bucket_width: int) -> Column:
+    """A span's length bucket: ``floor(length / bucket_width) *
+    bucket_width`` as ``long``, NULL for a NULL text, which no length
+    histogram counts. Shared by ``span_length_histogram`` and the
+    span-length drift check (§2.9)."""
+    return (F.floor(F.length(text) / bucket_width) * bucket_width).cast("long")
+
+
 def kind_histogram(docs: DataFrame) -> DataFrame:
-    """Kind-frequency histogram (A3/A12): explode → groupBy(kind).
-    Null kinds are kept as the literal bucket '<null>', as the drift
-    check's kind items keep them. Map-side partial aggregation bounds
-    the shuffle to |kinds| × partitions rows regardless of skew."""
+    """Kind-frequency histogram (A3/A12): explode → groupBy(kind_bucket).
+    Map-side partial aggregation bounds the shuffle to |kinds| ×
+    partitions rows regardless of skew."""
     return (
         docs.select(F.explode("spans").alias("s"))
-        .select(F.coalesce(F.col("s.kind"), F.lit("<null>")).alias("kind"))
+        .select(kind_bucket(F.col("s.kind")).alias("kind"))
         .groupBy("kind")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
 
 def span_length_histogram(docs: DataFrame, bucket_width: int = 16) -> DataFrame:
-    """Text span-length histogram bucketed by ``bucket_width`` chars,
-    the buckets the span-length drift check (§2.9) compares."""
+    """Text span-length histogram over ``span_length_bucket``, the
+    buckets the span-length drift check compares."""
     return (
         docs.select(F.explode("spans").alias("s"))
-        .where(F.col("s.text").isNotNull())
-        .select(
-            (F.floor(F.length("s.text") / bucket_width) * bucket_width)
-            .cast("long")
-            .alias("bucket"),
-        )
+        .select(span_length_bucket(F.col("s.text"), bucket_width).alias("bucket"))
+        .where(F.col("bucket").isNotNull())
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -169,46 +179,8 @@ def top_k_examples(docs: DataFrame, k: int = 5, salt_buckets: int = 32) -> DataF
 
 # --- mergeable distinct-count sketches (HLL, datasketches-compatible) ---------
 
-# log2 of the HLL bucket count for every per-partition sketch, the
-# checkpoint sidecar's included
+# log2 of the HLL bucket count of every per-partition sketch
 HLL_LG_K = 12
-
-
-def partition_sketch_rows(
-    docs: DataFrame,
-    columns: tuple[str, ...],
-    n_buckets: int = N_BUCKETS_DEFAULT,
-) -> DataFrame:
-    """One HLL sketch per (content partition, column) — every column in
-    a single wide aggregation (map-side partial sketches; the shuffle
-    carries one small binary per task × bucket). Shared machinery for
-    the standalone sketch API below and the checkpoint sidecar
-    (checkpoint.py::ResumableRun), so sketch precision is decided in
-    exactly one place."""
-    docs_p = docs.withColumn(
-        "partition_id", stable_partition_id(F.col("doc_id"), n_buckets)
-    )
-    wide = docs_p.groupBy("partition_id").agg(
-        *[
-            F.hll_sketch_agg(F.col(c), F.lit(HLL_LG_K)).alias(f"_s{i}")
-            for i, c in enumerate(columns)
-        ]
-    )
-    kv = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(c).alias("column"), F.col(f"_s{i}").alias("sketch")
-                )
-                for i, c in enumerate(columns)
-            ]
-        )
-    ).alias("kv")
-    return wide.select("partition_id", kv).select(
-        "partition_id",
-        F.col("kv.column").alias("column"),
-        F.col("kv.sketch").alias("sketch"),
-    )
 
 
 def partition_distinct_sketches(
@@ -217,21 +189,29 @@ def partition_distinct_sketches(
     n_buckets: int = N_BUCKETS_DEFAULT,
 ) -> DataFrame:
     """Per-content-partition HyperLogLog sketches for ``col`` —
-    ``(partition_id, sketch binary, estimate)``.
+    ``(partition_id, sketch binary, estimate)``, from one
+    ``groupBy(partition_id)`` whose map-side partial sketches keep the
+    shuffle to one small binary per task × bucket.
 
-    The 10^12-row upgrade over a one-shot ``approx_count_distinct``:
-    sketches are MERGEABLE state, sized O(2^HLL_LG_K) bytes each, so
-    they persist to the checkpoint table next to the per-partition
-    lineage rows and a resumed/incremental run unions them WITHOUT
-    rescanning completed partitions (north_star: "approx_count_distinct
-    via HyperLogLog"; the reference recomputes its Compass-style
+    Sketches are MERGEABLE state, O(2^HLL_LG_K) bytes each: the
+    sketches of disjoint corpora union into the estimate of their union
+    without a rescan (the reference recomputes its Compass-style
     distinct counts from scratch each run, schema_statistics.py:78-86).
-    ``F.hll_sketch_agg`` emits Apache DataSketches-compatible binaries,
-    readable outside Spark."""
-    return partition_sketch_rows(docs, (col,), n_buckets).select(
-        "partition_id",
-        "sketch",
-        F.hll_sketch_estimate("sketch").alias("estimate"),
+    They are for a column with no exact count to add up: the suite's
+    distinct doc_id count is exact in the checkpoint lineage
+    (``ResumableRun.distinct_docs``). ``F.hll_sketch_agg`` emits Apache
+    DataSketches-compatible binaries, readable outside Spark."""
+    docs_p = docs.withColumn(
+        "partition_id", stable_partition_id(F.col("doc_id"), n_buckets)
+    )
+    return (
+        docs_p.groupBy("partition_id")
+        .agg(F.hll_sketch_agg(F.col(col), F.lit(HLL_LG_K)).alias("sketch"))
+        .select(
+            "partition_id",
+            "sketch",
+            F.hll_sketch_estimate("sketch").alias("estimate"),
+        )
     )
 
 
@@ -239,8 +219,8 @@ def merge_distinct_sketches(sketches: DataFrame) -> DataFrame:
     """Union per-partition HLL sketches into one global estimate —
     ``(n_partitions, merged_estimate)``. Merging is associative and
     tiny (one binary per partition), so incremental ingest unions the
-    new partitions' sketches against the checkpointed ones instead of
-    recounting 10^12 keys."""
+    new partitions' sketches against stored ones instead of recounting
+    10^12 keys."""
     return sketches.agg(
         F.count(F.lit(1)).alias("n_partitions"),
         F.hll_sketch_estimate(

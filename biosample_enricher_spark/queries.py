@@ -2310,7 +2310,8 @@ def streaming_uniqueness(spark, sf_dir):
 def a2_sketch_mergeable(spark, sf_dir):
     """A2 upgrade: per-partition HyperLogLog sketches (datasketches
     binary via hll_sketch_agg) merged with hll_union_agg — the
-    checkpoint-storable, rescan-free form of approx distinct counting.
+    mergeable, rescan-free form of approx distinct counting for a
+    column with no exact per-bucket count to add up.
     Rows-only (sketch estimates have no DuckDB twin), but the row
     carries its own quantitative check: the exact count(DISTINCT) and
     the relative error, pinned < 2% in tests/test_sketches.py — a

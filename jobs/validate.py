@@ -21,9 +21,15 @@ sandbox the same script runs under local[N]. Re-running with the same
 driver and filtered out of the docs scan, and the report's
 ``partitions_skipped`` says how many there were.
 
+The report's ``docs_distinct_total`` is the exact distinct doc_id count
+of every bucket this --run-id has finished, over all its invocations,
+summed from the checkpoint lineage rows without reading a document.
+
 With --baseline, drift constraints (two-sample KS over span-length and
-kind-frequency histograms) run against the baseline corpus and are
-appended to the summary output.
+kind-frequency histograms) run against the baseline corpus and their
+verdicts go to the report's ``drift`` list; with --drift-by-partition
+the per-partition verdicts are also appended to the checkpoint table as
+lineage rows, and the failing ones are listed in the report.
 """
 
 from __future__ import annotations
@@ -57,11 +63,6 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
                         "tier (operators/bloom.py) instead of the exact "
                         "broadcast anti-join — for catalogs past "
                         "broadcast size; output provably identical")
-    p.add_argument("--sketch-distinct", action="store_true",
-                   help="write per-partition HLL distinct sketches for "
-                        "doc_id to the <checkpoint>_sketches sidecar and "
-                        "report the merged estimate (resumes union "
-                        "sketches instead of recounting)")
     p.add_argument("--streaming", action="store_true",
                    help="validate --input via the Structured Streaming "
                         "tier: drain the backlog with availableNow, "
@@ -95,6 +96,7 @@ def main(argv: list[str]) -> None:
     from biosample_enricher_spark.checkpoint import ResumableRun
     from biosample_enricher_spark.constraints import ConstraintSuite
     from biosample_enricher_spark.operators.drift import drift_check
+    from biosample_enricher_spark.spec import C_KIND_VOCAB
     from biosample_enricher_spark.synth import GenParams, gen_asset_catalog, gen_documents
 
     # under spark-submit the session/master is provided by the launcher
@@ -148,7 +150,6 @@ def main(argv: list[str]) -> None:
         args.checkpoint,
         run_id=args.run_id,
         suite=suite,
-        sketch_columns=("doc_id",) if args.sketch_distinct else (),
     )
 
     t0 = time.perf_counter()
@@ -163,7 +164,7 @@ def main(argv: list[str]) -> None:
 
     free_local_checkpoint(summary)
 
-    n_total = sum(r.total for r in rows if r.constraint_id == "kind_vocabulary")
+    n_total = sum(r.total for r in rows if r.constraint_id == C_KIND_VOCAB)
     report = {
         "run_id": args.run_id,
         "partitions_processed": len({r.partition_id for r in rows}),
@@ -172,13 +173,8 @@ def main(argv: list[str]) -> None:
         "elapsed_sec": round(elapsed, 3),
         "docs_per_sec": round(n_total / elapsed, 1) if elapsed > 0 else None,
         "constraints": sorted({r.constraint_id for r in rows}),
+        "docs_distinct_total": run.distinct_docs().first().n_docs,
     }
-
-    if args.sketch_distinct:
-        report["distinct_estimates"] = {
-            r.column: {"estimate": r.estimate, "n_partitions": r.n_partitions}
-            for r in run.distinct_estimates().collect()
-        }
 
     if args.baseline:
         base = spark.read.parquet(args.baseline)

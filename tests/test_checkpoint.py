@@ -100,34 +100,35 @@ def test_duplicate_doc_ids_share_a_bucket(spark, corpus):
 
 
 def test_sketch_sidecar_accumulates_across_resume(spark, corpus, tmp_path):
-    """Per-partition HLL sketches ride a sidecar table; after an
-    interrupted run + resume, the merged estimate covers the WHOLE
-    corpus without rescanning completed partitions, and a no-op
-    re-invocation appends nothing."""
+    """The distinct-doc count read back from the lineage rows covers
+    every bucket this run_id finished: after an interrupted run + resume
+    it is the corpus's exact distinct doc_id count (the corpus has
+    duplicate doc_ids), and a no-op re-invocation appends no lineage."""
     docs, catalog = corpus
     suite = ConstraintSuite(n_buckets=16)
     path = str(tmp_path / "cp")
     docs_p = suite.with_partition_id(docs)
-    run = ResumableRun(spark, path, run_id="rs", suite=suite,
-                       sketch_columns=("doc_id",))
+    run = ResumableRun(spark, path, run_id="rs", suite=suite)
     # interrupted: only buckets 0..7
     run.run(docs_p.where(F.col("partition_id") < 8).drop("partition_id"),
             catalog)
-    partial = run.distinct_estimates().first()
+    partial = run.distinct_docs().first()
     assert partial.n_partitions == 8
 
-    # resume: remaining buckets; merged estimate now ~= full distinct
+    # resume: remaining buckets; the count is now the whole corpus's
     run.run(docs, catalog)
-    est = run.distinct_estimates().first()
+    got = run.distinct_docs().first()
     exact = docs.select("doc_id").distinct().count()
-    assert est.column == "doc_id" and est.n_partitions == 16
-    assert abs(est.estimate - exact) / exact < 0.05
-    assert partial.estimate < est.estimate
+    assert exact < docs.count()
+    assert got.n_partitions == 16
+    assert got.n_docs == exact
+    assert partial.n_docs < got.n_docs
 
-    # fully resumed: nothing pending, no new sketch rows
-    n_rows = run.sketches.read().count()
+    # fully resumed: nothing pending, no new lineage rows
+    n_rows = run.table.read().count()
     run.run(docs, catalog)
-    assert run.sketches.read().count() == n_rows
+    assert run.table.read().count() == n_rows
+    assert run.distinct_docs().first() == got
 
 
 def test_foreign_lineage_rows_do_not_satisfy_completeness(spark, corpus, tmp_path):
@@ -273,14 +274,12 @@ def test_missing_constraint_row_keeps_bucket_pending(spark, corpus, tmp_path):
 
 def test_sketch_run_leaves_caller_cache_alone(spark, corpus, tmp_path):
     """On a fresh checkpoint pending() hands back the caller's docs
-    frame; the sketch pass's persist/unpersist must not drop a cache
-    the caller owns."""
+    frame; run() must not drop a cache the caller owns."""
     docs, catalog = corpus
     docs = docs.persist()
     docs.count()
     run = ResumableRun(spark, str(tmp_path / "cp"), run_id="cc",
-                       suite=ConstraintSuite(n_buckets=16),
-                       sketch_columns=("doc_id",))
+                       suite=ConstraintSuite(n_buckets=16))
     run.run(docs, catalog)
     assert docs.storageLevel.useMemory or docs.storageLevel.useDisk
     docs.unpersist()

@@ -329,6 +329,32 @@ def test_null_bucket_on_both_sides_is_one_bucket(spark):
     assert (psi.psi_stat, psi.passed) == (0.0, True)
 
 
+def test_drift_buckets_are_the_histograms_buckets(spark):
+    """The KS drift check's aligned counts per bucket equal the kind and
+    span-length histograms of each side, on corpora with many NULL kinds
+    and NULL texts."""
+    from biosample_enricher_spark.operators.drift import _drift_aligned
+    from biosample_enricher_spark.operators.stats import (
+        kind_histogram,
+        span_length_histogram,
+    )
+
+    base = gen_documents(spark, 800, GenParams(seed=61, null_kind=200, text_null=300))
+    cur = gen_documents(spark, 600, GenParams(seed=62, null_kind=50, text_null=500))
+    got = {C_DRIFT_SPAN_LEN: ({}, {}), C_DRIFT_KIND_FREQ: ({}, {})}
+    for r in _drift_aligned(base, cur, 16).collect():
+        key = r.bucket.len if r.constraint_id == C_DRIFT_SPAN_LEN else r.bucket.kind
+        for side, n in zip(got[r.constraint_id], (r.n_base, r.n_cur)):
+            if n:
+                side[key] = n
+    for i, docs in enumerate((base, cur)):
+        lens = {r.bucket: r.n for r in span_length_histogram(docs, 16).collect()}
+        kinds = {r.kind: r.n for r in kind_histogram(docs).collect()}
+        assert got[C_DRIFT_SPAN_LEN][i] == lens
+        assert got[C_DRIFT_KIND_FREQ][i] == kinds
+        assert "<null>" in kinds and None not in lens
+
+
 # --- EMD / Wasserstein-1 tier (round 5b) --------------------------------------
 
 

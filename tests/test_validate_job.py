@@ -44,6 +44,29 @@ def test_resumed_synthesize_run_reports_skipped_buckets(spark, tmp_path, capsys)
     assert report["partitions_processed"] == 11
 
 
+def test_resumed_run_reports_exact_distinct_docs(spark, tmp_path, capsys):
+    """Seed buckets 0..4, resume through the job: ``docs_distinct_total``
+    is the exact distinct doc_id count of the whole --synthesize corpus,
+    which has duplicate doc_ids, over both invocations."""
+    cp, n_docs = str(tmp_path / "cp"), 2000
+    params = GenParams(seed=42)  # what --synthesize generates
+    docs = gen_documents(spark, n_docs, params)
+    seeded = docs.where(stable_partition_id(F.col("doc_id"), 16) < 5)
+    ResumableRun(spark, cp, run_id="job", suite=ConstraintSuite(n_buckets=16)).run(
+        seeded, gen_asset_catalog(spark, params)
+    )
+
+    _load_job().main([
+        "--synthesize", str(n_docs), "--checkpoint", cp,
+        "--run-id", "job", "--n-buckets", "16",
+    ])
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    exact = docs.select("doc_id").distinct().count()
+    assert exact < n_docs
+    assert report["partitions_skipped"] == 5
+    assert report["docs_distinct_total"] == exact
+
+
 def test_baseline_drift_report_is_sorted(spark, tmp_path, capsys):
     """With --baseline and --drift-by-partition the report lists the
     global drift rows by constraint_id and the flagged partitions by
