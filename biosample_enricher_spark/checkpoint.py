@@ -22,6 +22,23 @@ that later lineage appends cannot change. Partitions are the stable content-addr
 ``constraints.core``, so a resume at a different executor count
 processes exactly the same remaining documents.
 
+A run whose frontier already holds every bucket stops there: it
+returns an empty summary and runs no suite job, writes no violations
+and appends no lineage.
+
+The violations output is partitioned by ``partition_id`` and holds one
+parquet file per bucket, sorted by ``(doc_id, constraint_id, field,
+message)``. The write hash-partitions on ``partition_id`` into
+``min(n_buckets, defaultParallelism)`` tasks, so each bucket is written
+by exactly one task and the write uses every core; the count is
+explicit because AQE coalesces a plain ``repartition("partition_id")``
+of a small result into a single task that writes every bucket
+serially. A bucket's file therefore holds the same rows in the same
+order whatever the core count or the input partitioning (in one JVM,
+the same bytes; across JVMs the parquet footer may list a column's
+encodings in another order), and the dynamic partition overwrite that
+makes a crash retry idempotent replaces whole files.
+
 This table is the engine's only per-partition store: a run's exact
 distinct-doc count is a sum over its lineage rows
 (``ResumableRun.distinct_docs``), not a second table of sketches.
@@ -41,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .constraints.core import ConstraintSuite, stable_partition_id
+from .constraints.core import SUMMARY_SCHEMA, ConstraintSuite, stable_partition_id
 from .spec import C_KIND_VOCAB
 
 CHECKPOINT_SCHEMA = T.StructType(
@@ -134,6 +151,18 @@ def checkpoint_rows_from_summary(
     )
 
 
+def _empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty frame of exactly ``schema`` (nullability included) that
+    is a local relation in the JVM, so collecting it runs no job;
+    ``createDataFrame([], schema)`` is a Python-backed RDD that only a
+    job proves empty."""
+    jspark = spark._jsparkSession
+    rows = spark._jvm.java.util.ArrayList()
+    return DataFrame(
+        jspark.createDataFrame(rows, jspark.parseDataType(schema.json())), spark
+    )
+
+
 class ResumableRun:
     """Run the constraint suite with partition-granular resume."""
 
@@ -185,15 +214,31 @@ class ResumableRun:
         doc count; return the summary of the work done in THIS
         invocation (empty if resumed past the end)."""
         todo = self.pending(docs, with_referential=asset_catalog is not None)
+        if self.partitions_skipped == self.suite.n_buckets:
+            # resumed past the end: no suite job, no write, no lineage
+            return _empty_frame(self.spark, SUMMARY_SCHEMA)
         result = self.suite.run(todo, asset_catalog)
         if violations_path is not None:
-            # dynamic partition overwrite keyed by partition_id: a crash
+            # One sorted file per bucket, written by one task: its
+            # contents depend on its rows alone. The task count is explicit
+            # because AQE would coalesce a plain
+            # repartition("partition_id") into one task writing every
+            # bucket serially.
+            # Dynamic partition overwrite keyed by partition_id: a crash
             # AFTER this write but BEFORE the lineage append makes the
             # resume reprocess those partitions — overwrite-by-partition
-            # replaces their rows instead of duplicating them (append
-            # mode would double every violation of the retried buckets)
+            # replaces their files instead of duplicating their rows
+            # (append mode would double every violation of the retried
+            # buckets).
+            n_tasks = min(
+                self.suite.n_buckets, self.spark.sparkContext.defaultParallelism
+            )
             (
-                result.violations.write.mode("overwrite")
+                result.violations.repartition(n_tasks, "partition_id")
+                .sortWithinPartitions(
+                    "partition_id", "doc_id", "constraint_id", "field", "message"
+                )
+                .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("partition_id")
                 .parquet(violations_path)

@@ -33,6 +33,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..spec import (
     C_DOC_ID_UNIQUE,
@@ -47,6 +48,19 @@ def stable_partition_id(doc_id: Column, n_buckets: int = N_BUCKETS_DEFAULT) -> C
     """Content-addressed partition id: deterministic under any physical
     partitioning / AQE re-plan / executor count."""
     return F.pmod(F.xxhash64(doc_id), F.lit(n_buckets)).cast("int")
+
+
+# ``ConstraintSuite.summarize``'s output, nullability included
+SUMMARY_SCHEMA = T.StructType(
+    [
+        T.StructField("constraint_id", T.StringType(), False),
+        T.StructField("partition_id", T.IntegerType(), True),
+        T.StructField("total", T.LongType(), False),
+        T.StructField("passed", T.LongType(), False),
+        T.StructField("failed", T.LongType(), False),
+        T.StructField("pass_rate", T.DoubleType(), True),
+    ]
+)
 
 
 @dataclass

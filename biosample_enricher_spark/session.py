@@ -7,6 +7,18 @@ nested-schema pruning on (the row check reads four struct fields of
 ``spans``), shuffle partitions
 sized to cores rather than the 200 default.
 
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is on:
+AQE coalesces and skew-splits shuffles inside ``persist()``ed plans as
+it does elsewhere. Spark's default keeps a cached plan's shuffle
+partitioning as planned, so the suite's cached duplicate keys, a few
+rows, ran 32 reduce tasks and passed that partition count on to every
+stage that read them. ``tests/test_plans.py`` pins the cases this could
+get wrong: the cached duplicate keys are coalesced, two cached
+``repartition(k)`` frames joined on ``k`` still give the uncached
+join's rows (the SPARK-45592 shape), an explicit
+``repartition(n, col).persist()`` keeps its ``n`` partitions, and the
+violations write has one hash exchange on ``partition_id``.
+
 On a real cluster the same builder is used by ``spark-submit
 --py-files``; only ``master`` and memory sizing differ.
 """
@@ -43,6 +55,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # let AQE coalesce shuffles inside persist()ed plans too, so a
+        # cache of a few rows (the suite's duplicate keys) is not 32
+        # reduce tasks that every stage reading it inherits
+        .config(
+            "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
+        )
         # Prefer shuffled-hash over sort-merge when the per-partition
         # build side fits (guide §3.1): drops both sort passes from
         # equi-joins like j4. Scale posture: the planner still falls

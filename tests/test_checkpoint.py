@@ -3,6 +3,9 @@ analog of HTTP-cache HIT/MISS, FIXTURES.md §A3)."""
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +16,7 @@ from biosample_enricher_spark.checkpoint import (
     checkpoint_rows_from_summary,
 )
 from biosample_enricher_spark.constraints import ConstraintSuite, stable_partition_id
+from biosample_enricher_spark.operators.dedup import free_local_checkpoint
 from biosample_enricher_spark.synth import GenParams, gen_asset_catalog, gen_documents
 
 P = GenParams(seed=33, n_assets=200)
@@ -283,3 +287,89 @@ def test_sketch_run_leaves_caller_cache_alone(spark, corpus, tmp_path):
     run.run(docs, catalog)
     assert docs.storageLevel.useMemory or docs.storageLevel.useDisk
     docs.unpersist()
+
+
+def _jobs_of(spark, group, fn):
+    """Run ``fn`` under its own job group → (its result, job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _listing(path):
+    return {
+        (os.path.relpath(os.path.join(d, f), path), os.path.getmtime(os.path.join(d, f)))
+        for d, _, files in os.walk(path)
+        for f in files
+    }
+
+
+def test_resume_past_the_end_runs_no_suite_job(spark, corpus, tmp_path):
+    """A run over a finished run_id resolves its frontier and stops: the
+    frontier collect is its only job, no violation file is touched, no
+    lineage is appended, and the empty summary has a normal summary's
+    schema (collecting it runs no job either)."""
+    docs, catalog = corpus
+    vpath = str(tmp_path / "viols")
+    run = ResumableRun(spark, str(tmp_path / "cp"), run_id="end",
+                       suite=ConstraintSuite(n_buckets=16))
+    first = run.run(docs, catalog, violations_path=vpath)
+    n_lineage = run.table.read().count()
+    files = _listing(vpath)
+
+    again, jobs = _jobs_of(
+        spark, "resume-past-the-end",
+        lambda: run.run(docs, catalog, violations_path=vpath),
+    )
+    _, frontier_jobs = _jobs_of(
+        spark, "frontier-only",
+        lambda: run.pending(docs, with_referential=True),
+    )
+    assert run.partitions_skipped == 16
+    assert frontier_jobs and len(jobs) == len(frontier_jobs)
+    rows, collect_jobs = _jobs_of(spark, "empty-collect", again.collect)
+    assert rows == [] and collect_jobs == []
+    assert again.schema == first.schema
+    assert run.table.read().count() == n_lineage
+    assert _listing(vpath) == files
+
+
+def _bucket_file_hashes(vpath):
+    """``partition_id=*`` directory → sha256 of its one parquet file."""
+    out = {}
+    for name in sorted(os.listdir(vpath)):
+        if not name.startswith("partition_id="):
+            continue
+        d = os.path.join(vpath, name)
+        parts = [f for f in os.listdir(d) if f.startswith("part-") and f.endswith(".parquet")]
+        assert len(parts) == 1, (name, parts)
+        with open(os.path.join(d, parts[0]), "rb") as fh:
+            out[name] = hashlib.sha256(fh.read()).hexdigest()
+    return out
+
+
+def test_violation_files_are_byte_identical(spark, corpus, tmp_path):
+    """Each bucket is one sorted parquet file whose bytes, within one
+    session, depend only on the bucket's rows: a single-shot run, a run
+    over the same docs in 7 input partitions, and a seeded-then-resumed
+    run write the same files."""
+    docs, catalog = corpus
+    suite = ConstraintSuite(n_buckets=16)
+
+    def write(name, *invocations):
+        run = ResumableRun(spark, str(tmp_path / f"cp_{name}"), run_id=name, suite=suite)
+        vpath = str(tmp_path / f"viols_{name}")
+        for todo in invocations:
+            free_local_checkpoint(run.run(todo, catalog, violations_path=vpath))
+        return _bucket_file_hashes(vpath)
+
+    single = write("single", docs)
+    assert len(single) > 8  # most of the 16 buckets hold violations
+    assert write("repartitioned", docs.repartition(7)) == single
+    seeded = docs.where(stable_partition_id(F.col("doc_id"), 16) < 5)
+    assert write("resumed", seeded, docs) == single

@@ -5,6 +5,8 @@ paths)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -132,6 +134,115 @@ def test_pending_plan_never_scans_the_checkpoint(spark, tmp_path, seeded):
     assert cp not in plan(result.violations)
     assert cp not in plan(result.summary)
     result.unpersist()
+
+
+def n_partitions(df) -> int:
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
+
+
+def test_cached_duplicate_keys_are_coalesced(spark):
+    """``canChangeCachedPlanOutputPartitioning`` is on: once the suite
+    has run, its cached duplicate keys are an AQE-coalesced shuffle
+    read, not one partition per ``spark.sql.shuffle.partitions``."""
+    assert spark.conf.get(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    ) == "true"
+    docs = gen_documents(spark, 500, GenParams(seed=1))
+    cat = gen_asset_catalog(spark, GenParams(seed=1))
+    result = ConstraintSuite(n_buckets=16).run(docs, cat)
+    result.summary.collect()
+    dups = result.persisted[0]
+    assert "AQEShuffleRead" in plan(dups)
+    assert n_partitions(dups) < int(spark.conf.get("spark.sql.shuffle.partitions"))
+    result.unpersist()
+
+
+def test_join_of_coalesced_caches_matches_uncached(spark):
+    """The SPARK-45592 shape: two cached ``repartition(k)`` frames,
+    coalesced by AQE to different partition counts, joined on ``k``
+    give the uncached join's rows."""
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8k",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1k",
+    }
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        a0 = spark.range(20_000).select((F.col("id") % 997).alias("k"), F.col("id").alias("va"))
+        b0 = spark.range(300).select((F.col("id") % 997).alias("k"), (F.col("id") * 7).alias("vb"))
+        a = a0.repartition("k").persist()
+        b = b0.repartition("k").persist()
+        a.count(), b.count()
+        assert n_partitions(a) != n_partitions(b)  # the case is live
+        assert sorted(a.join(b, "k").collect()) == sorted(a0.join(b0, "k").collect())
+        a.unpersist()
+        b.unpersist()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_explicit_repartition_of_a_cache_keeps_its_count(spark):
+    """``operators/graph.py`` spreads an under-partitioned cached edge
+    frame with ``repartition(par, "src").persist()``; AQE must not
+    coalesce that explicit count back down."""
+    par = spark.sparkContext.defaultParallelism
+    edges = spark.range(50).select(
+        (F.col("id") % 7).alias("src"), (F.col("id") % 11).alias("dst")
+    )
+    spread = edges.repartition(par, "src").persist()
+    spread.count()
+    assert n_partitions(spread) == par
+    spread.unpersist()
+
+
+def test_violations_write_is_one_exchange_on_partition_id(spark, tmp_path):
+    """The violations write clusters by bucket: over the cached union,
+    exactly one ``Exchange hashpartitioning(partition_id, n)`` with n =
+    min(n_buckets, defaultParallelism), then the Sort the partitioned
+    writer needs, then the write. Read from the write's own executed
+    plan in the SQL status store."""
+    from biosample_enricher_spark.checkpoint import ResumableRun
+
+    docs = gen_documents(spark, 500, GenParams(seed=2))
+    cat = gen_asset_catalog(spark, GenParams(seed=2))
+    vpath = str(tmp_path / "viols")
+    old = spark.conf.get("spark.sql.ui.explainMode")
+    spark.conf.set("spark.sql.ui.explainMode", "extended")
+    try:
+        run = ResumableRun(spark, str(tmp_path / "cp"), run_id="w",
+                           suite=ConstraintSuite(n_buckets=16))
+        run.run(docs, cat, violations_path=vpath)
+    finally:
+        spark.conf.set("spark.sql.ui.explainMode", old)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    writes = [
+        d for d in (
+            executions.apply(i).physicalPlanDescription()
+            for i in range(executions.size())
+        )
+        if "InsertIntoHadoopFsRelationCommand file:" + vpath in d
+    ]
+    assert len(writes) == 1
+    final = writes[0].split("\n+- == Final Plan ==\n")[1].split("\n+- == Initial Plan ==\n")[0]
+    lines = final.splitlines()
+    scan = next(i for i, ln in enumerate(lines) if "InMemoryTableScan" in ln)
+    above = lines[:scan]  # the write's own operators, above the cached union
+    n = min(16, spark.sparkContext.defaultParallelism)
+    exchanges = [i for i, ln in enumerate(above) if "Exchange" in ln]
+    assert len(exchanges) == 1
+    assert re.search(
+        rf"Exchange hashpartitioning\(partition_id#\d+, {n}\)", above[exchanges[0]]
+    )
+    sorts = [i for i, ln in enumerate(above) if "Sort [" in ln]
+    assert len(sorts) == 1 and sorts[0] < exchanges[0]
+    # the bucket sort satisfies the writer's partition_id ordering
+    assert re.search(r"Sort \[partition_id#\d+ ASC NULLS FIRST, doc_id#", above[sorts[0]])
+    assert any("WriteFiles" in ln for ln in above[:sorts[0]])
 
 
 def test_global_topn_avoids_full_sort(spark):

@@ -3,9 +3,11 @@ kind/media_ref distributions, explicit salting, AQE skew handling)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from biosample_enricher_spark.synth import GenParams, gen_documents
+from biosample_enricher_spark.synth import GenParams, gen_asset_catalog, gen_documents
 
 P = GenParams(seed=42, n_assets=5_000)
 
@@ -112,3 +114,21 @@ def test_simhash_skew_guards(spark):
     assert (200, 201) in got
     # none of the 100×99/2 empty-doc pairs may appear
     assert all(a >= 200 for a, _ in got)
+
+
+def test_violations_write_one_file_per_bucket_under_skew(spark, tmp_path):
+    """On the hot-key corpus every bucket of the violations output is
+    still exactly one parquet file, written by one task."""
+    from biosample_enricher_spark.checkpoint import ResumableRun
+    from biosample_enricher_spark.operators.dedup import free_local_checkpoint
+
+    docs, cat = gen_documents(spark, 3_000, P), gen_asset_catalog(spark, P)
+    run = ResumableRun(spark, str(tmp_path / "cp"), run_id="skew")
+    vpath = str(tmp_path / "viols")
+    free_local_checkpoint(run.run(docs, cat, violations_path=vpath))
+    buckets = [d for d in os.listdir(vpath) if d.startswith("partition_id=")]
+    assert len(buckets) == run.suite.n_buckets
+    for d in buckets:
+        parts = [f for f in os.listdir(os.path.join(vpath, d))
+                 if f.startswith("part-") and f.endswith(".parquet")]
+        assert len(parts) == 1, (d, parts)
