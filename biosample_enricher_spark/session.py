@@ -19,17 +19,48 @@ join's rows (the SPARK-45592 shape), an explicit
 ``repartition(n, col).persist()`` keeps its ``n`` partitions, and the
 violations write has one hash exchange on ``partition_id``.
 
-On a real cluster the same builder is used by ``spark-submit
---py-files``; only ``master`` and memory sizing differ.
+The ``file:`` FileSystem is ``NioLocalFileSystem`` (``jvm/``): Hadoop's
+checksummed ``LocalFileSystem`` over a ``RawLocalFileSystem`` whose
+``setPermission`` makes the same permission change with
+``Files.setPosixFilePermissions`` for modes within ``0777``. Without
+libhadoop, Hadoop's own ``setPermission`` forks a ``chmod`` process on
+every file create (data file and ``.crc``) and every ``mkdirs`` with a
+mode, which was most of a validation commit's time. Other modes
+(sticky bit) and non-POSIX filesystems still go to Hadoop's ``chmod``.
+Checksums, file modes and commit semantics are unchanged: the class
+keeps the one override of Hive's ``ProxyLocalFileSystem``, which
+Spark's bundled hive-exec otherwise makes the ``file:`` FileSystem (a
+rename onto an existing file fails). Two paths still spawn processes:
+``getPermission`` (one ``ls -ld`` per file status that loads its
+permission) and the FileContext API (``fs.AbstractFileSystem.file.impl``,
+which streaming checkpoints use), which this class does not reach. The
+jar is a build of the source, pinned by ``tests/test_local_fs.py``;
+rebuild it from the repository root with::
+
+    javac --release 17 -cp "$(python3 -c 'import pyspark, os; print(os.path.dirname(pyspark.__file__))')"/jars/hadoop-client-api-*.jar -d /tmp/nio-fs biosample_enricher_spark/jvm/NioLocalFileSystem.java && jar --create --no-manifest --file biosample_enricher_spark/jvm/local-fs.jar -C /tmp/nio-fs .
+
+Settings that only take effect when the JVM starts (``master``,
+``spark.driver.memory``, the driver class path) are set only when
+``get_spark`` launches the JVM itself. Under a launcher such as
+``spark-submit`` the launcher's master and memory stay, and the
+``file:`` FileSystem is switched only if that JVM can load the class
+(``spark-submit --driver-class-path biosample_enricher_spark/jvm/local-fs.jar``);
+without it the job runs on the ``file:`` FileSystem Spark loads by
+default. The setting reaches executors through ``spark.hadoop.*``, so a
+cluster job that writes ``file:`` paths needs the jar on its executors
+too.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+LOCAL_FS_CLASS = "biosample_enricher_spark.jvm.NioLocalFileSystem"
+LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "local-fs.jar")
 
 
 def get_spark(
@@ -40,17 +71,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox;
-    when launched via spark-submit on a cluster the submitted master
-    wins (builder configs do not override an active session's master).
+    When this call launches the JVM, ``master`` defaults to
+    ``local[$SPARK_GRAFT_CPUS]`` and a ``spark.driver.extraClassPath``
+    in ``extra_conf`` is extended with the FileSystem jar. When a
+    launcher already started the JVM, ``master`` is ignored.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    master = master or f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    extra_conf = dict(extra_conf or {})
 
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -76,15 +106,34 @@ def get_spark(
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
     )
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        # this call launches the JVM
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+        class_path = [LOCAL_FS_JAR]
+        if "spark.driver.extraClassPath" in extra_conf:
+            class_path.append(extra_conf.pop("spark.driver.extraClassPath"))
+        builder = (
+            builder.master(master or f"local[{cpus}]")
+            .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+            .config("spark.driver.extraClassPath", os.pathsep.join(class_path))
+            .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
+        )
+    elif _jvm_loads(LOCAL_FS_CLASS):
+        builder = builder.config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
+    for k, v in extra_conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _prewarm_python_workers(spark)
     return spark
+
+
+def _jvm_loads(class_name: str) -> bool:
+    """True iff the already started JVM (connected to here, if a
+    launcher started it) can load ``class_name``."""
+    SparkContext._ensure_initialized()
+    return bool(SparkContext._jvm.org.apache.spark.util.Utils.classIsLoadable(class_name))
 
 
 def _prewarm_python_workers(spark: SparkSession) -> bool:

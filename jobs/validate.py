@@ -7,7 +7,9 @@ Deployment (north_rule posture)::
     # package the engine once
     cd /root/repo && zip -r /tmp/engine.zip biosample_enricher_spark
 
-    spark-submit --py-files /tmp/engine.zip jobs/validate.py \\
+    spark-submit --py-files /tmp/engine.zip \\
+        --driver-class-path biosample_enricher_spark/jvm/local-fs.jar \\
+        jobs/validate.py \\
         --input  <path or iceberg table of documents(doc_id, spans)> \\
         --catalog <path of asset_catalog(media_ref, ...)> \\
         --checkpoint <checkpoint table path> \\
@@ -15,8 +17,11 @@ Deployment (north_rule posture)::
         --run-id <stable id for resume> \\
         [--n-buckets 64] [--baseline <path>]
 
-On a cluster, --master/--num-executors come from spark-submit; in the
-sandbox the same script runs under local[N]. Re-running with the same
+The session is ``session.get_spark``'s: the engine's SQL settings, with
+--master/--num-executors and the driver memory from spark-submit. The
+driver class path puts the engine's ``file:`` FileSystem (permissions
+by syscall, not a forked chmod per file) on the driver; without it the
+job runs on Spark's default one. Re-running with the same
 --run-id resumes: the completed buckets are collected once on the
 driver and filtered out of the docs scan, and the report's
 ``partitions_skipped`` says how many there were.
@@ -91,17 +96,15 @@ def parse_args(argv: list[str]) -> argparse.Namespace:
 def main(argv: list[str]) -> None:
     args = parse_args(argv)
 
-    from pyspark.sql import SparkSession
-
     from biosample_enricher_spark.checkpoint import ResumableRun
     from biosample_enricher_spark.constraints import ConstraintSuite
     from biosample_enricher_spark.operators.drift import drift_check
+    from biosample_enricher_spark.session import get_spark
     from biosample_enricher_spark.spec import C_KIND_VOCAB
     from biosample_enricher_spark.synth import GenParams, gen_asset_catalog, gen_documents
 
-    # under spark-submit the session/master is provided by the launcher
-    spark = SparkSession.builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    # under spark-submit the launcher's master and driver memory stay
+    spark = get_spark(app_name="validate")
 
     if args.streaming:
         from biosample_enricher_spark.streaming import run_streaming_validation

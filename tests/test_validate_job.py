@@ -5,15 +5,20 @@ from __future__ import annotations
 
 import importlib.util
 import json
+import os
+import subprocess
+import sys
 from pathlib import Path
 
 from pyspark.sql import functions as F
 
 from biosample_enricher_spark.checkpoint import ResumableRun
 from biosample_enricher_spark.constraints import ConstraintSuite, stable_partition_id
+from biosample_enricher_spark.session import LOCAL_FS_CLASS
 from biosample_enricher_spark.synth import GenParams, gen_asset_catalog, gen_documents
 
-JOB = Path(__file__).resolve().parents[1] / "jobs" / "validate.py"
+REPO = Path(__file__).resolve().parents[1]
+JOB = REPO / "jobs" / "validate.py"
 
 
 def _load_job():
@@ -88,3 +93,59 @@ def test_baseline_drift_report_is_sorted(spark, tmp_path, capsys):
         for f in report["drift_partitions_flagged"]
     ]
     assert len(flagged) > 1 and flagged == sorted(flagged)
+
+
+SUBMITTED = """
+import importlib.util, json, sys
+from pyspark.sql import SparkSession
+
+spec = importlib.util.spec_from_file_location("validate_job", sys.argv[1])
+job = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(job)
+job.main(sys.argv[2:])
+spark = SparkSession.getActiveSession()
+jvm = spark._jvm
+fs = jvm.org.apache.hadoop.fs.FileSystem.get(
+    jvm.java.net.URI("file:///"), spark._jsc.hadoopConfiguration()
+)
+print(json.dumps({
+    "master": spark.sparkContext.master,
+    "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
+    "cached_plan": spark.conf.get(
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    ),
+    "local_fs": fs.getClass().getName(),
+}))
+"""
+
+
+def test_spark_submit_keeps_master_and_gets_engine_settings(tmp_path):
+    """spark-submit --master local[2], without the FileSystem jar on the
+    driver class path: the job runs on local[2] with the engine's SQL
+    settings, on the local FileSystem Spark loads by default."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    script = tmp_path / "submitted.py"
+    script.write_text(SUBMITTED)
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(filter(None, (str(REPO), os.environ.get("PYTHONPATH")))),
+        PYSPARK_PYTHON=sys.executable,
+        PYSPARK_DRIVER_PYTHON=sys.executable,
+        SPARK_GRAFT_PREWARM="0",
+    )
+    proc = subprocess.run(
+        [
+            os.path.join(_find_spark_home(), "bin", "spark-submit"),
+            "--master", "local[2]", "--driver-memory", "1g",
+            str(script), str(JOB),
+            "--synthesize", "200", "--checkpoint", str(tmp_path / "cp"),
+            "--run-id", "submit", "--n-buckets", "8",
+        ],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    report, session = (json.loads(line) for line in proc.stdout.strip().splitlines()[-2:])
+    assert report["partitions_processed"] == 8
+    assert session.pop("local_fs") != LOCAL_FS_CLASS
+    assert session == {"master": "local[2]", "shuffle_partitions": "32", "cached_plan": "true"}
