@@ -49,18 +49,30 @@ without it the job runs on the ``file:`` FileSystem Spark loads by
 default. The setting reaches executors through ``spark.hadoop.*``, so a
 cluster job that writes ``file:`` paths needs the jar on its executors
 too.
+
+The ``get_spark`` call that creates the SparkContext also starts the
+Python-worker prewarm (``_prewarm_python_workers``) on a daemon
+``InheritableThread`` and returns without waiting for it. The prewarm
+job then runs while the caller registers its inputs, reads them and
+plans its first query, instead of before. It runs once per context:
+``get_spark`` on a live session submits no job. Under the default FIFO
+scheduler the prewarm's one task per core holds every core until its
+first task ends, so a job the caller submits meanwhile (a parquet read's
+schema-inference job, the first query) waits for that task. Stopping
+the session cancels a running prewarm, silently.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark import SparkContext
+from pyspark import InheritableThread, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 LOCAL_FS_CLASS = "biosample_enricher_spark.jvm.NioLocalFileSystem"
 LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "local-fs.jar")
+PREWARM_JOB = "session: python worker prewarm"  # description of its job and name of its thread
 
 
 def get_spark(
@@ -74,7 +86,9 @@ def get_spark(
     When this call launches the JVM, ``master`` defaults to
     ``local[$SPARK_GRAFT_CPUS]`` and a ``spark.driver.extraClassPath``
     in ``extra_conf`` is extended with the FileSystem jar. When a
-    launcher already started the JVM, ``master`` is ignored.
+    launcher already started the JVM, ``master`` is ignored. The call
+    that creates the SparkContext starts the worker prewarm in the
+    background.
     """
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     extra_conf = dict(extra_conf or {})
@@ -123,9 +137,13 @@ def get_spark(
         builder = builder.config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS)
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
+    creates_context = SparkContext._active_spark_context is None
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _prewarm_python_workers(spark)
+    if creates_context:
+        InheritableThread(
+            target=_prewarm_python_workers, args=(spark,), name=PREWARM_JOB, daemon=True
+        ).start()
     return spark
 
 
@@ -137,20 +155,27 @@ def _jvm_loads(class_name: str) -> bool:
 
 
 def _prewarm_python_workers(spark: SparkSession) -> bool:
-    """Initialize the reusable Python worker pool at session build.
+    """Initialize the reusable Python worker pool; blocks until its job
+    ends.
 
     The first Arrow/pandas-UDF stage of a fresh session otherwise pays
     one python-daemon fork + ``import pandas``/``pyarrow`` per
     concurrent task (cores × ~0.5-1 s of CPU, all at once) in the
     middle of the first user query — guide §4.5's "heavyweight init
     once" applied to the pool itself, the same reason
-    ``spark.python.worker.reuse`` keeps workers alive afterwards. The
-    warm-up job touches no user data (a ``spark.range`` over the
-    core count) and caches nothing; disable with
-    ``SPARK_GRAFT_PREWARM=0``. Failures are non-fatal — the pool then
-    initializes lazily exactly as before. Returns True iff the warm-up
-    job actually ran (pinned by tests/test_session_prewarm.py — this
-    job has silently no-op'd twice; never trust it unverified)."""
+    ``spark.python.worker.reuse`` keeps workers alive afterwards. Most
+    of the job's time is the fresh JVM's first job and the worker
+    start, not the pandas import. ``get_spark`` runs it once per
+    SparkContext, on a background thread, so it overlaps the caller's
+    first reads and planning; a job submitted meanwhile waits under
+    FIFO until one of its tasks frees a core. The warm-up job touches
+    no user data (a ``spark.range`` over the core count) and caches
+    nothing; disable with ``SPARK_GRAFT_PREWARM=0``. Failures,
+    including its cancellation when the session stops, are non-fatal
+    and silent — the pool then initializes lazily exactly as before.
+    Returns True iff the warm-up job actually ran (pinned by
+    tests/test_session_prewarm.py — this job has silently no-op'd
+    twice; never trust it unverified)."""
     if os.environ.get("SPARK_GRAFT_PREWARM", "1") == "0":
         return False
     try:
@@ -178,9 +203,7 @@ def _prewarm_python_workers(spark: SparkSession) -> bool:
 
         n = spark.sparkContext.defaultParallelism
         try:
-            spark.sparkContext.setJobDescription(
-                "session: python worker prewarm"
-            )
+            spark.sparkContext.setJobDescription(PREWARM_JOB)
             # noop sink, NOT count(): count() lets the optimizer prune
             # the (deterministic) UDF projection entirely — the guide
             # §1.4 trap — so a count()-based prewarm runs a job that

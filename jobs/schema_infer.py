@@ -16,6 +16,10 @@ writes a draft 2020-12 JSON Schema document::
 with a seeded hash-sample. The property/item shapes come from the
 typed table schema; the data-driven ``required`` lists come from ONE
 distributed counting aggregation (see operators/schema_infer.py).
+
+The session is ``session.get_spark``'s, as in ``jobs/validate.py``: the
+engine's SQL settings, with the master and driver memory from
+spark-submit.
 """
 
 from __future__ import annotations
@@ -45,10 +49,12 @@ def main(argv: list[str]) -> None:
     from biosample_enricher_spark.operators.schema_infer import (
         infer_json_schema,
     )
+    from biosample_enricher_spark.session import get_spark
     from biosample_enricher_spark.sources import resolve_table_io
 
-    spark = SparkSession.builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    # a live session (in-process call) is kept as it is; otherwise the
+    # engine's session, with spark-submit's master and driver memory
+    spark = SparkSession.getActiveSession() or get_spark(app_name="schema_infer")
 
     df = resolve_table_io(spark, args.input).read()
     if args.where:

@@ -1,5 +1,7 @@
 """``jobs/validate.py`` end to end in the test session: the JSON report
-of a resumed run."""
+of a resumed run. Under spark-submit, both jobs (``validate.py`` and
+``schema_infer.py``) build the engine's session on the submitted
+master."""
 
 from __future__ import annotations
 
@@ -19,6 +21,7 @@ from biosample_enricher_spark.synth import GenParams, gen_asset_catalog, gen_doc
 
 REPO = Path(__file__).resolve().parents[1]
 JOB = REPO / "jobs" / "validate.py"
+SCHEMA_JOB = REPO / "jobs" / "schema_infer.py"
 
 
 def _load_job():
@@ -119,10 +122,10 @@ print(json.dumps({
 """
 
 
-def test_spark_submit_keeps_master_and_gets_engine_settings(tmp_path):
-    """spark-submit --master local[2], without the FileSystem jar on the
-    driver class path: the job runs on local[2] with the engine's SQL
-    settings, on the local FileSystem Spark loads by default."""
+def _submit(tmp_path, job: Path, *job_args: str) -> tuple[dict, dict]:
+    """spark-submit ``job`` on ``--master local[2]`` with the prewarm
+    off and without the FileSystem jar → (the job's report, the
+    session it left active)."""
     from pyspark.find_spark_home import _find_spark_home
 
     script = tmp_path / "submitted.py"
@@ -138,14 +141,54 @@ def test_spark_submit_keeps_master_and_gets_engine_settings(tmp_path):
         [
             os.path.join(_find_spark_home(), "bin", "spark-submit"),
             "--master", "local[2]", "--driver-memory", "1g",
-            str(script), str(JOB),
-            "--synthesize", "200", "--checkpoint", str(tmp_path / "cp"),
-            "--run-id", "submit", "--n-buckets", "8",
+            str(script), str(job), *job_args,
         ],
         env=env, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     report, session = (json.loads(line) for line in proc.stdout.strip().splitlines()[-2:])
+    return report, session
+
+
+def test_spark_submit_keeps_master_and_gets_engine_settings(tmp_path):
+    """spark-submit --master local[2], without the FileSystem jar on the
+    driver class path: the job runs on local[2] with the engine's SQL
+    settings, on the local FileSystem Spark loads by default."""
+    report, session = _submit(
+        tmp_path, JOB,
+        "--synthesize", "200", "--checkpoint", str(tmp_path / "cp"),
+        "--run-id", "submit", "--n-buckets", "8",
+    )
     assert report["partitions_processed"] == 8
+    assert report["session_sec"] > 0
     assert session.pop("local_fs") != LOCAL_FS_CLASS
     assert session == {"master": "local[2]", "shuffle_partitions": "32", "cached_plan": "true"}
+
+
+def test_schema_infer_spark_submit_gets_engine_settings(spark, tmp_path):
+    """``jobs/schema_infer.py`` under spark-submit --master local[2]
+    builds its session as the validate job does: the submitted master
+    stays and the engine's SQL settings apply."""
+    docs = str(tmp_path / "docs")
+    gen_documents(spark, 200, GenParams(seed=3)).write.parquet(docs)
+    out = tmp_path / "schema.json"
+    report, session = _submit(
+        tmp_path, SCHEMA_JOB, "--input", docs, "--out-json-schema", str(out),
+    )
+    assert report["n_properties"] > 0
+    assert json.loads(out.read_text())["properties"].keys() >= {"doc_id", "spans"}
+    session.pop("local_fs")
+    assert session == {"master": "local[2]", "shuffle_partitions": "32", "cached_plan": "true"}
+
+
+def test_in_process_main_keeps_the_callers_session(spark, tmp_path, capsys):
+    """``main`` called on a live session runs on it and leaves its
+    settings alone: the fixture's 8 shuffle partitions stay 8."""
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    _load_job().main([
+        "--synthesize", "200", "--checkpoint", str(tmp_path / "cp"),
+        "--run-id", "live", "--n-buckets", "8",
+    ])
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["partitions_processed"] == 8
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before == "8"
