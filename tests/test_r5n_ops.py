@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 from biosample_enricher_spark.queries import QUERIES
 
 SF01 = "/root/testdata/sf0.01"
@@ -21,12 +23,21 @@ def test_hll_sliding_distinct_error_floor_and_agreement_with_a21(spark):
 
 
 def test_foreachbatch_sink_rerun_is_idempotent(spark):
-    """Two invocations (fresh checkpoint each) must produce identical
-    sink aggregates — the truncate-then-write contract; and a single
-    drain must emit exactly one epoch."""
-    one = {tuple(r) for r in QUERIES["streaming_foreachbatch_sink"](spark, SF01).collect()}
-    two = {tuple(r) for r in QUERIES["streaming_foreachbatch_sink"](spark, SF01).collect()}
+    """Two invocations (fresh checkpoint and sink directory each) must
+    produce identical sink aggregates over the 5 event types, and the
+    sink of a single availableNow drain must hold exactly one epoch, 0.
+    The sink is located from the result itself, so the check reads the
+    output of the call under test, never a leftover of an earlier run."""
+    first = QUERIES["streaming_foreachbatch_sink"](spark, SF01)
+    second = QUERIES["streaming_foreachbatch_sink"](spark, SF01)
+    one = {tuple(r) for r in first.collect()}
+    two = {tuple(r) for r in second.collect()}
     assert one == two and len(one) == 5
-    back = spark.read.parquet("/tmp/fb_sink_sf0_01")
+    first_dirs = {os.path.dirname(f) for f in first.inputFiles()}
+    sink_dirs = {os.path.dirname(f) for f in second.inputFiles()}
+    assert len(sink_dirs) == 1
+    # each call drains into its own directory
+    assert first_dirs.isdisjoint(sink_dirs)
+    back = spark.read.parquet(sink_dirs.pop())
     epochs = [r._epoch for r in back.select("_epoch").distinct().collect()]
     assert epochs == [0]
